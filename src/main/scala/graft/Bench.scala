@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.store.SnapshotStore
@@ -79,80 +78,36 @@ object Bench {
       sys.env.get("SPARK_GRAFT_WALL_BUDGET_S").map(_.toDouble).getOrElse(1800.0)
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // v2 commit: tasks move output directly instead of a second
-      // job-commit rename pass — the hour-partitioned stores write 720
-      // one-file directories, so the bench otherwise times 1440 renames
-      // per store build. (Trade-off: failed jobs may leave partial
-      // output; fine for a bench whose stores are rebuilt from scratch.)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // fs.file.impl = RawLocalFileSystem (the r15 .crc-sidecar knob) is
-      // REMOVED (r16): RocksDB state stores call FileSystem.getLocal(),
-      // which hard-casts the file:// FS to LocalFileSystem — under the
-      // raw impl every transformWithState commit threw
-      // CANNOT_WRITE_STATE_STORE (164 silent [STREAM_FAILED] rows in the
-      // r16 baseline sweep; q_stream_tws / q_stream_tws_files /
-      // q_state_inspect / q_stream_restart were timing their own crash).
-      // The ~1.6 s of sidecar writes it saved was an environment knob
-      // the r15 verdict discounted anyway; store-write rows are again
-      // comparable to r14-era draws.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
-    def time(fn: => Unit): Double = {
+    // A workload that throws is a failure, never a time: it is recorded
+    // with its exception class, kept out of the totals, and the run exits
+    // nonzero once the summary line is out.
+    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val pass1 = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
+    def time(name: String)(fn: => Unit): Option[Double] = {
       val t0 = System.nanoTime()
-      try fn catch { case e: Throwable => System.err.println(s"[bench] ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
+      try { fn; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        failed(name) = e.getClass.getName
+        results.remove(name)
+        pass1.remove(name)
+        None
+      }
     }
+    def record(name: String)(fn: => Unit): Unit =
+      time(name)(fn).foreach(results(name) = _)
 
     // Per-query shuffle volume (read+write bytes over all tasks): the
     // number that predicts 100 TB behavior better than wall seconds on a
     // 32-core sandbox — a query whose time is fine but whose shuffle is
-    // O(input) is the one that breaks at 1000 executors. Attributed per
-    // query by draining the (async) listener bus around each run.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ()
-          }
-        }
-      })
-    def measureShuffle(fn: => Unit): Long = {
-      org.apache.spark.graftbus.drain(spark.sparkContext)
-      val before = shuffleBytes.get()
-      fn
-      org.apache.spark.graftbus.drain(spark.sparkContext)
-      shuffleBytes.get() - before
-    }
-    // Serial-stage census (r16, guide §2.5): wall-ms spent in stages that
-    // ran with ≤2 tasks and took ≥200 ms — the signature of AQE's
-    // byte-sized coalescing folding a CPU-dense, byte-light exchange to
-    // one partition (the q_fuzzy_join2 finding: a few-MB candidate
-    // stream whose join+dedup+levenshtein chain ran as ONE ~5 s task).
-    // Diagnostic attribution only; additions-only to the detail JSON.
-    val serialStageMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = s.stageInfo
-          val wall = (for { sub <- si.submissionTime; c <- si.completionTime }
-            yield c - sub).getOrElse(0L)
-          if (si.numTasks <= 2 && wall >= 200L) { serialStageMs.addAndGet(wall); () }
-        }
-      })
+    // O(input) is the one that breaks at 1000 executors. Serial-stage
+    // wall (r16, guide §2.5): the q_fuzzy_join2 finding, a few-MB
+    // candidate stream whose join+dedup+levenshtein chain ran as ONE
+    // ~5 s task. Both are diagnostic attribution only.
+    val census = StageCensus.install(spark)
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -223,17 +178,19 @@ object Bench {
     // time the failure, not the workload (rounds ≤6 did exactly that;
     // their calib values are time-to-abort draws, comparable only to
     // each other)
-    val calibCpu = time(materialize(
+    val calibCpu = time("calib_cpu")(materialize(
       spark.range(256L * 1000 * 1000)
         .select(sum(xxhash64(col("id")).bitwiseAND(lit(0x7FFFFFFFL))))))
+      .getOrElse(Double.NaN)
     val calibPath = "target/graft_calib/scan_probe"
     if (!new java.io.File(calibPath, "_SUCCESS").isFile)
       spark.range(32L * 1000 * 1000)
         .select(col("id"), xxhash64(col("id")).as("h"), pmod(col("id"), lit(997)).as("k"))
         .write.mode("overwrite").parquet(calibPath)
-    def fsScan(): Double = time(materialize(
+    def fsScan(): Double = time("calib_fs")(materialize(
       spark.read.parquet(calibPath).select(sum(col("id")),
         sum(col("h").bitwiseAND(lit(0x7FFFFFFFL))), sum(col("k")))))
+      .getOrElse(Double.NaN)
     val calibFs = math.min(fsScan(), fsScan())
 
     // environment scale for baseline/envelope comparisons (same rule as
@@ -269,9 +226,10 @@ object Bench {
         codeCacheMb: Double, metaspaceMb: Double, gcMs: Long, heapMb: Double)
     val envSamples = scala.collection.mutable.ArrayBuffer[EnvSample]()
     def envSample(at: String, pass: Int): Unit = {
-      val micro = time(materialize(
+      val micro = time("env_probe")(materialize(
         spark.range(32L * 1000 * 1000)
           .select(sum(xxhash64(col("id")).bitwiseAND(lit(0x7FFFFFFFL))))))
+        .getOrElse(Double.NaN)
       val pools = java.lang.management.ManagementFactory
         .getMemoryPoolMXBeans.asScala
       def poolMb(prefix: String): Double =
@@ -302,8 +260,6 @@ object Bench {
       try org.apache.spark.sql.graftbridge.unloadStateStores()
       catch { case e: Throwable => System.err.println(s"[bench] unload: ${e.getMessage}") }
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val pass1 = scala.collection.mutable.LinkedHashMap[String, Double]()
     val pass2 = scala.collection.mutable.LinkedHashMap[String, Double]()
     val pass3 = scala.collection.mutable.LinkedHashMap[String, Double]()
     val shuffleMb = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -316,7 +272,7 @@ object Bench {
     // contract the staging layer documents. Additions-only: min-of-2/3,
     // noop sink, env vars and the one-line JSON stay frozen.
     val stagingS = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // serial-stage wall per query (pass 1) — see serialStageMs above
+    // serial-stage wall per query (pass 1) — see census above
     val serialMs = scala.collection.mutable.LinkedHashMap[String, Double]()
     var skippedPass2 = 0
     var skippedPass3 = 0
@@ -374,6 +330,8 @@ object Bench {
           s""""shuffle_mb":${jmap(shuffleMb)},""" +
           s""""staging_s":${jmap(stagingS)},""" +
           s""""serial_ms":${jmap(serialMs)},""" +
+          s""""failed":${failed.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+            .mkString("{", ",", "}")},""" +
           s""""env_micro_s":${jmap(envMicro)},""" +
           s""""pass_totals":[${j(p1)},${j(p2)}],""" +
           s""""staging_build_s":[${stagingBuild.map(j).mkString(",")}],""" +
@@ -419,16 +377,16 @@ object Bench {
       // lookup queries below time *reads*, not a first-touch store build.
       // Delete any prior store so the write is actually measured.
       SnapshotStore.deleteRecursively(new java.io.File(SnapshotStore.root))
-      results("store_write") = time(SnapshotStore.ensureEventsStore(spark, sfDir))
+      record("store_write")(SnapshotStore.ensureEventsStore(spark, sfDir))
       emitDetail(complete = false)
-      results("json_store_write") = time(graft.store.JsonStore.ensureEventsJsonStore(spark, sfDir))
-      results("json_concat_write") = time(graft.store.JsonStore.ensureConcatAllStore(spark, sfDir))
+      record("json_store_write")(graft.store.JsonStore.ensureEventsJsonStore(spark, sfDir))
+      record("json_concat_write")(graft.store.JsonStore.ensureConcatAllStore(spark, sfDir))
       emitDetail(complete = false)
       // coarse day-bucketed replay source for the streaming queries —
       // built here so q_stream_* time STREAMING, not a first-touch write
-      results("replay_store_write") = time(SnapshotStore.ensureReplayStore(spark, sfDir))
-      results("geojson_store_write") =
-        time(graft.queries.CoreQueries.ensureCanonicalGeoStore(spark, sfDir))
+      record("replay_store_write")(SnapshotStore.ensureReplayStore(spark, sfDir))
+      record("geojson_store_write")(
+        graft.queries.CoreQueries.ensureCanonicalGeoStore(spark, sfDir))
       emitDetail(complete = false)
       // pre-touch the geo store like the events store below: q_geojson_*
       // queries should time re-nesting, not the first-touch FS cost of the
@@ -483,16 +441,16 @@ object Bench {
         // #2c: the r14 throttle window spanned ten workloads and the
         // coarser cadence left its edges unbracketed)
         if (streaming || i % 10 == 0) envSample(name, 1)
-        var t = 0.0
         val stgBefore = graft.store.Staging.buildSeconds
-        val serBefore = serialStageMs.get()
-        val sb = measureShuffle { t = time(fn()) }
+        val (t, w) = census.measure(time(name)(fn()))
         stagingS(name) = graft.store.Staging.buildSeconds - stgBefore
-        serialMs(name) = (serialStageMs.get() - serBefore).toDouble
-        pass1(name) = t
-        results(name) = t
+        serialMs(name) = w.serialMs.toDouble
+        t.foreach { t =>
+          pass1(name) = t
+          results(name) = t
+        }
         envMicro(name) = envSamples.last.microS
-        shuffleMb(name) = math.rint(sb / 1e5) / 10.0
+        shuffleMb(name) = math.rint(w.shuffleBytes / 1e5) / 10.0
         if (streaming) streamHygiene()
         stagingBuild = Seq(graft.store.Staging.buildSeconds - stg0._1, 0.0)
         stagingCount = Seq(graft.store.Staging.buildsSoFar - stg0._2, 0L)
@@ -524,16 +482,18 @@ object Bench {
     def outlier(name: String, t1: Double): Boolean =
       baseQueries.get(name).exists(over(t1, _)) ||
         envMax.get(name).exists(m => over(t1, m * envScaleDn))
+    // (a workload that failed in pass 1 is not re-drawn)
     val adaptive: Seq[(String, () => Unit)] =
-      if (only.nonEmpty) readWork // subset probes keep full min-of-2
-      else readWork.filter { case (name, _) =>
-        pinned.contains(name) ||
+      readWork.filter { case (name, _) =>
+        pass1.contains(name) && (
+          only.nonEmpty || // subset probes keep full min-of-2
+          pinned.contains(name) ||
           !baseQueries.contains(name) || // new since the committed baseline
           outlier(name, pass1(name)) ||
           // pass-1 carried a staging build (VERDICT r15 Next #5): the
           // recorded min should reflect the warm index-READ cost, not the
           // sweep-order accident of being the frame's first consumer
-          stagingS.getOrElse(name, 0.0) > 0.3
+          stagingS.getOrElse(name, 0.0) > 0.3)
       }
 
     // ---- pass-2 ordering + reserve (VERDICT r14 Next #2b): the r14
@@ -566,11 +526,12 @@ object Bench {
         if (elapsed() > wallBudget) pass2Reserve += 1
         val streaming = name.startsWith("q_stream")
         if (streaming) envSample(name, 2)
-        val t = time(fn())
-        pass2(name) = t
-        if (t < results(name)) {
-          results(name) = t
-          envMicro(name) = envSamples.last.microS
+        time(name)(fn()).foreach { t =>
+          pass2(name) = t
+          if (t < results(name)) {
+            results(name) = t
+            envMicro(name) = envSamples.last.microS
+          }
         }
         if (streaming) streamHygiene()
         stagingBuild = Seq(stg1._1 - stg0._1,
@@ -596,11 +557,12 @@ object Bench {
         else {
           val streaming = name.startsWith("q_stream")
           if (streaming) envSample(name, 3)
-          val t = time(fn())
-          pass3(name) = t
-          if (t < results(name)) {
-            results(name) = t
-            envMicro(name) = envSamples.last.microS
+          time(name)(fn()).foreach { t =>
+            pass3(name) = t
+            if (t < results(name)) {
+              results(name) = t
+              envMicro(name) = envSamples.last.microS
+            }
           }
           if (streaming) streamHygiene()
           emitDetail(complete = false)
@@ -646,8 +608,10 @@ object Bench {
         s""""pass2_n":${pass2.size},"degraded":${skippedPass2 + skippedPass3 > 0},""" +
         s""""staging_build_s":[${stagingBuild.map(j).mkString(",")}],""" +
         s""""calib_cpu_s":${j(calibCpu)},"calib_fs_s":${j(calibFs)},""" +
-        s""""n_queries":${results.size},"detail_file":"$detailPath",""" +
+        s""""n_queries":${results.size},"n_failed":${failed.size},""" +
+        s""""detail_file":"$detailPath",""" +
         s""""sf":"$sfDir"}""")
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registry queries to files —
   * the r15 optimization round's plan-evidence artifact generator
   * (plans/r15/<query>_{before,after}.txt). Usage:
@@ -12,13 +10,7 @@ object PlanDump {
     require(args.length >= 4, "usage: PlanDump <outDir> <suffix> <sfDir> q...")
     val (outDir, suffix, sfDir) = (args(0), args(1), args(2))
     val names = args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     val qs = SparkEntry.queries
     names.foreach { n =>

@@ -933,30 +933,13 @@ object ScaleProbe {
       .orderBy("s_a", "s_b")))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     val base = "/root/testdata/sf0.1"
-    val big = "/root/repo/target/scaleprobe/sf0.5"
+    val big = "target/scaleprobe/sf0.5"
     buildReplica(spark, base, big, copies = 5)
 
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      }
-    })
+    val census = StageCensus.install(spark)
 
     def measure(name: String, dir: String): (Double, Double) = {
       val pinned = ProbeConf.getOrElse(name, Nil)
@@ -982,13 +965,12 @@ object ScaleProbe {
       // over staged index scans.
       val q = FitVariants.getOrElse(name, SparkEntry.queries(name))
       q(spark, dir).write.format("noop").mode("overwrite").save()
-      org.apache.spark.graftbus.drain(spark.sparkContext)
-      val s0 = shuffleBytes.get()
-      val t0 = System.nanoTime()
-      q(spark, dir).write.format("noop").mode("overwrite").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftbus.drain(spark.sparkContext)
-      ((secs * 100).round / 100.0, ((shuffleBytes.get() - s0) / 1e5).round / 10.0)
+      val (secs, w) = census.measure {
+        val t0 = System.nanoTime()
+        q(spark, dir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      ((secs * 100).round / 100.0, (w.shuffleBytes / 1e5).round / 10.0)
     }
 
     // Third scale point + exponent fit (VERDICT r7 Next #2): two points
@@ -998,8 +980,8 @@ object ScaleProbe {
     // Anything fitting ≥ 1.3 in shuffle across BOTH segments needs a
     // plan fix or a documented physics cause.
     if (args.headOption.contains("expfit")) {
-      val u5 = "/root/repo/target/scaleprobe/sf0.5u"
-      val u25 = "/root/repo/target/scaleprobe/sf2.5u"
+      val u5 = "target/scaleprobe/sf0.5u"
+      val u25 = "target/scaleprobe/sf2.5u"
       buildUniqueReplica(spark, base, u5, copies = 5)
       buildUniqueReplica(spark, base, u25, copies = 25)
       ensureUniqueFactTables(spark, base, u5, copies = 5)
@@ -1046,7 +1028,7 @@ object ScaleProbe {
       println(s"$name,$blowup,$t1,$t5,$tx,$s1,$s5,$sx")
     }
 
-    val bigU = "/root/repo/target/scaleprobe/sf0.5u"
+    val bigU = "target/scaleprobe/sf0.5u"
     buildUniqueReplica(spark, base, bigU, copies = 5)
     spark.read.parquet(s"$bigU/documents.parquet").write.format("noop").mode("overwrite").save()
     println("candidate_probe,sf0.1_s,sf0.5u_s,time_x,sf0.1_shuffle_mb,sf0.5u_shuffle_mb,shuffle_x")

@@ -4,14 +4,7 @@ package graft
 // Writes PLANS.md: the physical plans of the scale-critical queries.
 object Scratch {
   def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.SparkSession
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dir = "/root/testdata/sf0.01"
     val interesting = Seq(
       "q_point_lookup" -> "partition-pruned point lookup on the hour store",
@@ -220,7 +213,7 @@ object Scratch {
       sb.append(df.queryExecution.executedPlan.toString.take(4500))
       sb.append("\n```\n")
     }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/PLANS.md"), sb.toString)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
 
     // Full-registry plan audit — the permanent form of the round-7

@@ -1,0 +1,33 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one SparkSession factory of the graft mains and tests, so that a
+  * result or a timing never depends on which entry point built the
+  * session. */
+object Session {
+
+  /** Local worker threads: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+
+  def local(cpus: Int = Session.cpus): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.parquet carries TIMESTAMP(NANOS); see Tables.events
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      // v2 commit: tasks move their output into place at task commit
+      // instead of a second job-commit rename pass — the hour-partitioned
+      // stores write 720 one-file directories, which is otherwise 1440
+      // renames per store build. Trade-off: a failed job may leave
+      // partial output; every store here is rebuilt from scratch.
+      // (fs.file.impl stays the default checksummed LocalFileSystem:
+      // RocksDB state stores call FileSystem.getLocal, which casts to it.)
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}

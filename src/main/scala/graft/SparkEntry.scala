@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{CoreQueries, PipelineQueries, Q, StoreQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
 
   /** All registered operator queries (each a `graft.queries.Q`). */

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,21 +11,7 @@ object Verify {
     val only = args.drop(2).toSet
     def selected = if (only.isEmpty) SparkEntry.queries
                    else SparkEntry.queries.filter(kv => only(kv._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // ADVICE r15 asked for ONE fs.file.impl shared with the bench; the
-      // resolution is that BOTH sessions now use the default (checksum)
-      // LocalFileSystem — the r15 raw-FS knob broke every RocksDB
-      // state-store commit (FileSystem.getLocal hard-casts to
-      // LocalFileSystem), crashing the transformWithState queries.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

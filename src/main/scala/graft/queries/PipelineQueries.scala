@@ -2,7 +2,8 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Clustering, Dedup, Multimodal, Sampling, Similarity, Stats, TextAnalysis}
+import graft.operators.{Bpe, Clustering, Dedup, Multimodal, Normalize, Sampling, Similarity, Stats,
+  TextAnalysis}
 import graft.sources.Tables
 import graft.plans.Spread._
 
@@ -3671,27 +3672,14 @@ object PipelineQueries {
              |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // Column profiling — the first query any pipeline runs on a new drop:
-    // per column, row/null/distinct counts in ONE pass (every stat is a
-    // combinable aggregate; the per-column rows are unpivoted from one
-    // aggregation, not one scan per column).
+    // per column, row/null/distinct counts, through the same table
+    // profile q_profile_table runs on lineitem.
     Q("q_profile",
-      (s, dir) => {
-        val e = Tables.events(s, dir)
-        val cols = Seq("event_id", "user_id", "event_type", "value")
-        val aggs = cols.flatMap { c =>
-          Seq(count(col(c)).as(s"_n_$c"),
-            count_distinct(col(c)).as(s"_d_$c"))
-        }
-        val g = e.agg(count(lit(1)).as("_rows"), aggs: _*)
-        val rows = cols.map { c =>
-          struct(lit(c).as("col"), col("_rows").as("n_rows"),
-            (col("_rows") - col(s"_n_$c")).as("n_null"),
-            col(s"_d_$c").as("n_distinct"))
-        }
-        g.select(explode(array(rows: _*)).as("p"))
-          .select(col("p.col"), col("p.n_rows"), col("p.n_null"), col("p.n_distinct"))
-          .orderBy("col")
-      },
+      (s, dir) =>
+        Normalize.profileTable(Tables.events(s, dir),
+            Seq("event_id", "user_id", "event_type", "value"))
+          .withColumnRenamed("column_name", "col")
+          .orderBy("col"),
       Some("""SELECT col, n_rows, n_null, n_distinct FROM (
              |  SELECT 'event_id' AS col, count(*) AS n_rows,
              |         count(*) - count(event_id) AS n_null,

@@ -23,8 +23,9 @@ import graft.sources.Tables
   */
 object SnapshotStore {
 
-  /** All store output stays inside the repo (driver sandbox contract). */
-  val root = "/root/repo/target/graftstore"
+  /** All store output stays under `target/` of the working directory, so
+    * two checkouts never share stores, staging frames or tuning ledgers. */
+  val root: String = Paths.get("target", "graftstore").toAbsolutePath.toString
 
   /** Recursive delete (shared by bench re-baselining and stale-location
     * cleanup). */

@@ -458,9 +458,16 @@ class DedupSpec extends SparkSpec {
   test("contamination plan reads the staged hot set, not a re-inlined dfCount") {
     val eval = Seq((1L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text")
     val corpus = Seq((10L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text")
-    val plan = Dedup.contaminationFlags(corpus, eval, "id", "text", 5, 500000L,
-      bloomFpp = Some(0.01)).queryExecution.executedPlan.toString
-    assert(plan.contains("decon_hot_shingles"), s"hot set not staged:\n${plan.take(2000)}")
+    val flags = Dedup.contaminationFlags(corpus, eval, "id", "text", 5, 500000L,
+      bloomFpp = Some(0.01))
+    val plan = flags.queryExecution.executedPlan.toString
+    // scan roots from the plan nodes, not the plan text: the text cuts a
+    // scan's location at 100 characters, so a staged label under a long
+    // checkout path would not show in it
+    val scanned = flags.queryExecution.sparkPlan.collectLeaves()
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.map(_.getName) }.flatten
+    assert(scanned.exists(_.startsWith("decon_hot_shingles")), s"hot set not staged: $scanned")
     // the df-count aggregation must appear at most once in the plan —
     // its duplication per broadcast(hot) consumer was the 3× shuffle
     // defect the bench instrumentation caught

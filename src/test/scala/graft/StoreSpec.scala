@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -9,9 +8,6 @@ import graft.store.{CompressedStore, MergeStore, SnapshotStore}
 
 class StoreSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(java.nio.file.Paths.get("/root/repo/target"), prefix).toString
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -23,7 +19,7 @@ class StoreSpec extends SparkSpec {
   ).toDF("id", "ts", "v")
 
   test("snapshot store: write → read-back equality, bucket column correct") {
-    val path = tmp("snap")
+    val path = targetTmp("snap")
     SnapshotStore.write(events, path, "ts")
     val back = SnapshotStore.read(spark, path)
     assert(back.count() == 4)
@@ -34,7 +30,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("bucket lookup prunes partitions (PartitionFilters in the plan)") {
-    val path = tmp("snap")
+    val path = targetTmp("snap")
     SnapshotStore.write(events, path, "ts")
     val lookup = SnapshotStore.lookupBucket(spark, path, "2024-01-01-10")
     assert(lookup.count() == 2)
@@ -46,7 +42,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("one file per hour bucket (repartition before partitionBy)") {
-    val path = tmp("snap")
+    val path = targetTmp("snap")
     SnapshotStore.write(events, path, "ts")
     val dirs = new java.io.File(path).listFiles.filter(_.getName.startsWith("bucket="))
     assert(dirs.length == 3)
@@ -56,7 +52,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("store size stat is positive after write") {
-    val path = tmp("snap")
+    val path = targetTmp("snap")
     SnapshotStore.write(events, path, "ts")
     assert(SnapshotStore.totalSizeBytes(path) > 0)
   }
@@ -101,7 +97,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("per-bucket gzip JSON store round-trips") {
-    val path = tmp("jsongz")
+    val path = targetTmp("jsongz")
     val df = events.select($"id".as("event_id"), expr("unix_micros(ts)").as("ts_us"),
       lit(1L).as("user_id"), lit("t").as("event_type"), $"v".as("value"),
       graft.store.JsonStore.bucketExpr($"ts").as("bucket"))
@@ -131,7 +127,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("ORC store round-trips types and pushes predicates to the scan") {
-    val path = tmp("orc")
+    val path = targetTmp("orc")
     events.select($"id", $"v", lit("a\"b,c").as("s"))
       .write.mode("overwrite").orc(path)
     val back = spark.read.orc(path)
@@ -142,7 +138,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("CSV round-trips quotes, escapes, doubles and longs exactly") {
-    val path = tmp("csv")
+    val path = targetTmp("csv")
     val in = Seq(
       (1L, 0.1 + 0.2, """{"k": 69}"""),
       (2L, 1.0 / 3.0, "comma, and \"quoted\" text"),
@@ -166,7 +162,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("XML round-trips markup characters, doubles and longs exactly") {
-    val path = tmp("xml")
+    val path = targetTmp("xml")
     val in = Seq(
       (1L, 0.1 + 0.2, """<b att="x">&amp; raw & brackets</b>"""),
       (2L, 1.0 / 3.0, "plain text"),
@@ -223,7 +219,7 @@ class StoreSpec extends SparkSpec {
 
   test("z-order bbox scan: partition pruning + zkey pushdown, exact result") {
     import graft.functions.ZOrder
-    val path = tmp("zstore")
+    val path = targetTmp("zstore")
     // 32×32 full grid, scaled to the 16-bit key space via <<11
     val grid = (0 until 32).flatMap(x => (0 until 32).map(y => (x.toLong << 11, y.toLong << 11)))
       .toDF("gx", "gy")
@@ -301,7 +297,7 @@ class StoreSpec extends SparkSpec {
   test("hilbert bbox scan: quadrant IN-list pruning, exact result") {
     import graft.functions.HilbertOps
     import graft.store.HilbertStore
-    val path = tmp("hstore")
+    val path = targetTmp("hstore")
     // 32×32 full grid scaled to the 16-bit space via <<11 (z-order twin)
     val grid = (0 until 32).flatMap(x => (0 until 32).map(y => (x.toLong << 11, y.toLong << 11)))
       .toDF("gx", "gy")
@@ -328,7 +324,7 @@ class StoreSpec extends SparkSpec {
 
   test("skip index: exact lookup, partition pruning on surviving buckets only") {
     import graft.store.SkipIndexStore
-    val path = tmp("skipstore")
+    val path = targetTmp("skipstore")
     // 400 rows bucketed by user hash (the layout key), probed by id
     val rows = (1L to 400L).map(i => (i, i % 37, s"t${i % 5}"))
       .toDF("event_id", "user_id", "event_type")
@@ -358,7 +354,7 @@ class StoreSpec extends SparkSpec {
 
   test("bloom index: exact lookup, constant-width signature, pruned IN-list") {
     import graft.store.{BloomIndexStore, SkipIndexStore}
-    val path = tmp("bloomstore")
+    val path = targetTmp("bloomstore")
     val rows = (1L to 400L).map(i => (i, i % 37, s"t${i % 5}"))
       .toDF("event_id", "user_id", "event_type")
       .withColumn("fb", pmod(xxhash64($"user_id"), lit(SkipIndexStore.Buckets.toLong)))
@@ -415,8 +411,8 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compact: shrinks file count, keeps every row, files are disjoint time slices") {
-    val src = tmp("cmp_src")
-    val out = tmp("cmp_out")
+    val src = targetTmp("cmp_src")
+    val out = targetTmp("cmp_out")
     val many = (1L to 200L).map(i =>
       (i, ts(f"2024-01-${i % 28 + 1}%02d 0${i % 9 + 1}:00:00"), i.toDouble))
       .toDF("id", "ts", "v")
@@ -554,7 +550,7 @@ class StoreSpec extends SparkSpec {
 
   test("string zone map: prefix scan exact, truncation-safe, pruned IN-list") {
     import graft.store.StringZoneStore
-    val path = tmp("zonestore")
+    val path = targetTmp("zonestore")
     // keys spanning the alphabet; several share the 4-char truncation
     // prefix 'spar' (sparse vs spark) — truncation must never false-skip
     val words = Seq("alpha", "beta", "gamma", "spark", "sparse", "spare",
@@ -592,7 +588,7 @@ class StoreSpec extends SparkSpec {
 
   test("DeltaLogStore: protocol-shaped commits, remove shadowing, time travel") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta") + "/tbl"
+    val path = targetTmp("graft_delta") + "/tbl"
     val d0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val d1 = Seq((3L, "c")).toDF("k", "s")
     DeltaLogStore.commit(spark, path, Some(d0.coalesce(1)), 0L)
@@ -633,7 +629,7 @@ class StoreSpec extends SparkSpec {
 
   test("DeltaLogStore checkpoints: parquet state equals JSON replay, old JSON skippable") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta_cp") + "/tbl"
+    val path = targetTmp("graft_delta_cp") + "/tbl"
     // 25 commits at the delta-spark default cadence (checkpoint every
     // 10): v0..v24 each append one row; v12 additionally DELETES v0's
     // file so the checkpointed state carries a remove tombstone
@@ -664,7 +660,7 @@ class StoreSpec extends SparkSpec {
     // the same commits with no checkpoints must resolve identical
     // snapshots at every probed version (across both checkpoints, the
     // rewrite, and versions below/between/after them)
-    val twin = tmp("graft_delta_nocp") + "/tbl"
+    val twin = targetTmp("graft_delta_nocp") + "/tbl"
     DeltaLogStore.commit(spark, twin, Some(row(0L)), 0L)
     val t0 = DeltaLogStore.snapshotFiles(spark, twin, Some(0L))
       .select("path").as[String].collect().toSeq
@@ -711,7 +707,7 @@ class StoreSpec extends SparkSpec {
 
   test("graftdelta source: versionAsOf reads, PushedFilters reach the parquet scan") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta_src") + "/tbl"
+    val path = targetTmp("graft_delta_src") + "/tbl"
     val d0 = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val d1 = Seq((3L, "c")).toDF("k", "s")
     DeltaLogStore.commit(spark, path, Some(d0.coalesce(1)), 0L)
@@ -749,7 +745,7 @@ class StoreSpec extends SparkSpec {
 
   test("graftdelta write path: append + overwrite commit through the log") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta_w") + "/tbl"
+    val path = targetTmp("graft_delta_w") + "/tbl"
     // creation is a version-0 library commit (metaData/protocol header);
     // the writer API serves the reference's APPEND shape
     // (delta_lake.py:31-33) against an existing table
@@ -782,7 +778,7 @@ class StoreSpec extends SparkSpec {
     // the reference's store_document appends to a directory it never
     // explicitly created (delta_lake.py:31-36) — Delta creates the table
     // on first append, and so does graftdelta (ADVICE r14)
-    val path = tmp("graft_delta_create") + "/tbl"
+    val path = targetTmp("graft_delta_create") + "/tbl"
     Seq((1L, "a"), (2L, "b")).toDF("k", "s")
       .write.format("graftdelta").mode("append").save(path)
     assert(DeltaLogStore.latestVersion(path) == 0L)
@@ -799,7 +795,7 @@ class StoreSpec extends SparkSpec {
     assert(spark.read.format("graftdelta").load(path).count() == 3L)
     // first OVERWRITE on a fresh directory also creates (nothing to
     // remove, version 0 carries only adds)
-    val path2 = tmp("graft_delta_create2") + "/tbl"
+    val path2 = targetTmp("graft_delta_create2") + "/tbl"
     Seq((9L, "z")).toDF("k", "s")
       .write.format("graftdelta").mode("overwrite").save(path2)
     assert(DeltaLogStore.latestVersion(path2) == 0L)
@@ -807,13 +803,13 @@ class StoreSpec extends SparkSpec {
       .as[(Long, String)].collect().toSet == Set((9L, "z")))
     // READS of a never-created table still fail loudly...
     val e = intercept[Exception] {
-      spark.read.format("graftdelta").load(tmp("graft_delta_nope")).collect()
+      spark.read.format("graftdelta").load(targetTmp("graft_delta_nope")).collect()
     }
     assert(e.getMessage.contains("no graftdelta log"), e.getMessage)
     // ...and time travel cannot target a table that was never created
     val e2 = intercept[Exception] {
       Seq((1L, "x")).toDF("k", "s").write.format("graftdelta")
-        .option("versionAsOf", 0L).mode("append").save(tmp("graft_delta_nope2"))
+        .option("versionAsOf", 0L).mode("append").save(targetTmp("graft_delta_nope2"))
     }
     assert(e2.getMessage.contains("never created"), e2.getMessage)
     ()
@@ -821,7 +817,7 @@ class StoreSpec extends SparkSpec {
 
   test("graftdelta: empty snapshot reads as zero rows with the declared schema") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta_e") + "/tbl"
+    val path = targetTmp("graft_delta_e") + "/tbl"
     DeltaLogStore.commit(spark, path,
       Some(Seq((1L, "a")).toDF("k", "s").coalesce(1)), 0L)
     val f0 = DeltaLogStore.snapshotFiles(spark, path, Some(0L))
@@ -842,7 +838,7 @@ class StoreSpec extends SparkSpec {
 
   test("DeltaLogStore: cleaned-up versions fail loudly; vacuum shrinks the store size") {
     import graft.store.DeltaLogStore
-    val path = tmp("graft_delta_v") + "/tbl"
+    val path = targetTmp("graft_delta_v") + "/tbl"
     def row(v: Long) = Seq((v, s"r$v")).toDF("k", "s").coalesce(1)
     DeltaLogStore.commit(spark, path, Some(row(0L)), 0L)
     // q_store_size teeth (VERDICT r13 Next #8): the size stat must

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -22,8 +21,7 @@ class StreamingSpec extends SparkSpec {
       (3L, ts("2024-01-01 11:05:00"), "b", 3.5),
       (4L, ts("2024-01-02 09:00:00"), "a", 4.5)
     ).toDF("id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream").toString
+    val path = targetTmp("stream")
     SnapshotStore.write(events, path, "ts")
 
     val streamed = Replay.windowedReplay(spark, path, "t_replay", filesPerBatch = 1)
@@ -49,8 +47,7 @@ class StreamingSpec extends SparkSpec {
       (4L, ts("2024-01-01 12:30:00"), "a", 4.5),
       (5L, ts("2024-01-01 13:01:00"), "b", 9.9)
     ).toDF("id", "ts", "event_type", "value")
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "wmstream").toString
+    val base = targetTmp("wmstream")
     SnapshotStore.write(events, s"$base/store", "ts")
 
     val emitted = Replay.windowedReplayAppend(spark, s"$base/store", s"$base/out")
@@ -82,8 +79,7 @@ class StreamingSpec extends SparkSpec {
       // ≤ 13:00 emit, i.e. starts ≤ 12:00
       (3L, ts("2024-01-01 13:01:00"), "b", 9.0)
     ).toDF("id", "ts", "event_type", "value")
-    val base = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "slstream").toString
+    val base = targetTmp("slstream")
     SnapshotStore.write(events, s"$base/store", "ts")
 
     val emitted = Replay.slidingReplayAppend(spark, s"$base/store", s"$base/out")
@@ -208,8 +204,7 @@ class StreamingSpec extends SparkSpec {
       (3L, ts("2024-01-02 11:05:00"), "b", 3.5),
       (4L, ts("2024-01-03 09:00:00"), "a", 4.5)
     ).toDF("id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "mview").toString
+    val path = targetTmp("mview")
     // day-partitioned store → 3 files → filesPerBatch=1 forces 3 batches
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
@@ -240,8 +235,7 @@ class StreamingSpec extends SparkSpec {
     val events = (0L until 24L).map { i =>
       (i, ts(f"2024-01-0${i % 3 + 1}%d 0${i % 8 + 1}%d:15:00"), "a", 1.0, i * 37L % 11L)
     }.toDF("id", "ts", "event_type", "value", "user_id")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "cmsview").toString
+    val path = targetTmp("cmsview")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -268,8 +262,7 @@ class StreamingSpec extends SparkSpec {
     val vecs = (0L until 12L).map { i =>
       (i, Array(1.0f + i % 3, 2.0f + i % 5, 1.0f + i % 7))
     }.toDF("vec_id", "embedding")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "annsrc").toString
+    val path = targetTmp("annsrc")
     val t0 = (System.currentTimeMillis() / 1000L) * 1000L - 3600L * 1000L
     (0 until 3).foreach { b =>
       val tmp = s"$path/_t$b"
@@ -305,8 +298,7 @@ class StreamingSpec extends SparkSpec {
       (i, ts(f"2024-01-0${i % 3 + 1}%d 10:15:00"),
         if (i % 2 == 0L) "a" else "b", (i * 13 % 100).toDouble, i)
     }.toDF("id", "ts", "event_type", "value", "user_id")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "driftview").toString
+    val path = targetTmp("driftview")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -327,8 +319,7 @@ class StreamingSpec extends SparkSpec {
       (i, ts(f"2024-01-0${i % 3 + 1}%d 10:15:00"),
         if (i % 4 == 0L) "purchase" else "view", (i * 97 % 1000) / 1000.0, i)
     }.toDF("id", "ts", "event_type", "value", "user_id")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "brierview").toString
+    val path = targetTmp("brierview")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -349,8 +340,7 @@ class StreamingSpec extends SparkSpec {
     val events = vals.zipWithIndex.map { case (v, i) =>
       (i.toLong, ts(f"2024-01-0${i % 3 + 1}%d 10:15:00"), "a", v / 1000.0, i.toLong)
     }.toDF("id", "ts", "event_type", "value", "user_id")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "quantview").toString
+    val path = targetTmp("quantview")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -367,8 +357,7 @@ class StreamingSpec extends SparkSpec {
     val events = (0L until 24L).map { i =>
       (i, ts(f"2024-01-0${i % 3 + 1}%d 0${i % 8 + 1}%d:15:00"), "a", 1.0, i * 37L % 11L)
     }.toDF("id", "ts", "event_type", "value", "user_id")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "hllview").toString
+    val path = targetTmp("hllview")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -391,8 +380,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("latestView: replayed batch never sees its own crashed attempt; uncommitted ignored") {
-    val root = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "views").toString
+    val root = targetTmp("views")
     Seq(0L, 1L, 2L).foreach { v =>
       val d = new java.io.File(root, s"v$v"); d.mkdirs()
       if (v < 2) new java.io.File(d, "_SUCCESS").createNewFile() // v2 = crashed write
@@ -430,8 +418,7 @@ class StreamingSpec extends SparkSpec {
       ("ontime_b", Seq((3L, ts("2024-01-01 11:10:00")), (5L, ts("2024-01-01 13:30:00")))),
       ("late", Seq((7L, ts("2024-01-01 10:15:00")), (35L, ts("2024-01-01 12:00:30")),
         (14L, ts("2024-01-01 12:30:00")), (21L, ts("2024-01-01 14:59:00")))))
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "latecensus").toString
+    val path = targetTmp("latecensus")
     val t0 = (System.currentTimeMillis() / 1000L) * 1000L - 3600L * 1000L
     files.zipWithIndex.foreach { case ((tag, rows), i) =>
       val tmp = s"$path/_tmp$tag"
@@ -467,8 +454,7 @@ class StreamingSpec extends SparkSpec {
       (4L, ts("2024-01-02 12:00:00"), 3L, 0.5),
       (5L, ts("2024-01-03 09:00:00"), 9L, 4.5)
     ).toDF("id", "ts", "user_id", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "topkv").toString
+    val path = targetTmp("topkv")
     events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
       .repartition($"bucket")
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
@@ -794,8 +780,7 @@ class StreamingSpec extends SparkSpec {
       (1L, ts("2024-01-01 11:00:00"), "a", 0.025),
       (3L, ts("2024-01-02 09:00:00"), "b", 1.0)
     ).toDF("user_id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "twsfiles").toString
+    val path = targetTmp("twsfiles")
     SnapshotStore.write(events, path, "ts")
 
     def run() = Replay.runningTotalsReplayFiles(spark, path, path + "_out")
@@ -817,8 +802,7 @@ class StreamingSpec extends SparkSpec {
       (11L, 1L, ts("2024-01-01 11:00:00"), "a", 0.2),
       (12L, 2L, ts("2024-01-02 10:30:00"), "b", 0.4)
     ).toDF("event_id", "user_id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "rowdedup").toString
+    val path = targetTmp("rowdedup")
     SnapshotStore.write(events, path, "ts")
     val got = Replay.rowDedupReplay(spark, path, path + "_work")
       .orderBy("bucket_us").as[(Long, Long, Long)].collect().toSeq
@@ -835,8 +819,7 @@ class StreamingSpec extends SparkSpec {
       (1L, ts("2024-01-01 10:05:00"), "a", 0.05),
       (2L, ts("2024-01-01 10:02:00"), "b", 0.007)
     ).toDF("user_id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stateread").toString
+    val path = targetTmp("stateread")
     SnapshotStore.write(events, path, "ts")
     Replay.runningTotalsReplayFiles(spark, path, path + "_out")
     val got = Replay.readRunningTotalsState(spark, path + "_out_chk")
@@ -852,8 +835,7 @@ class StreamingSpec extends SparkSpec {
       (3L, ts("2024-01-03 09:00:00"), "b", 0.5), // run-2-only key
       (1L, ts("2024-01-04 08:00:00"), "a", 0.4) // key 1 CONTINUES in run 2
     ).toDF("user_id", "ts", "event_type", "value")
-    val path = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "restart").toString
+    val path = targetTmp("restart")
     events
       .withColumn("bucket", date_format(date_trunc("day", $"ts"), "yyyy-MM-dd"))
       .repartition($"bucket")
@@ -935,8 +917,7 @@ class StreamingSpec extends SparkSpec {
       Seq((11L, t1)),                    // batch 1: dup of 0 → dropped
       Seq((22L, t4))                     // batch 2: dups dropped 11 only → kept
     )
-    val store = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ingestsrc").toString
+    val store = targetTmp("ingestsrc")
     val tBase = (System.currentTimeMillis() / 1000L) * 1000L - 3600L * 1000L
     batches.zipWithIndex.foreach { case (docs, b) =>
       val tmp = s"$store/_tmp$b"
@@ -1000,8 +981,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ratePacedReplay: rate-micro-batch-driven census equals the batch aggregation") {
     // an sfDir-shaped fixture: Tables.events reads $dir/events.parquet
-    val dir = Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "ratesf").toString
+    val dir = targetTmp("ratesf")
     // 11 rows with batches=8 -> rowsPerBatch 2, 6 non-empty rate batches,
     // a partial final batch, and values >= 11 filtered before the join
     val events = (1L to 11L).map { i =>
