@@ -36,7 +36,7 @@ object Verify {
     // (q_store_size reads the engine-written store's own files back via
     // DuckDB read_blob — the store path is keyed by sf, which only the
     // Verify invocation knows)
-    val sfName = Paths.get(sfDir).getFileName.toString
+    val sfName = graft.store.SnapshotStore.sfName(sfDir)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_SF__", sfName))}" }
       .mkString("{", ",", "}")

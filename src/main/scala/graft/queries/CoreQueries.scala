@@ -93,7 +93,7 @@ object CoreQueries {
     * separately (/root/reference/benchmark.py:55-80). */
   def ensureCanonicalGeoStore(s: SparkSession, dir: String): String = synchronized {
     import graft.model.Schemas
-    val path = s"${graft.store.SnapshotStore.root}/geojson_${java.nio.file.Paths.get(dir).getFileName}"
+    val path = s"${graft.store.SnapshotStore.root}/geojson_${graft.store.SnapshotStore.sfName(dir)}"
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS"))) {
       val flat = Tables.events(s, dir).select(
         date_format(col("ts"), "yyyy-MM-dd'T'HH:mm:ss").as("timestamp"),

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Paths
-
 import org.apache.spark.sql.functions._
 
 import graft.functions.Pairing
@@ -91,7 +89,7 @@ object StoreQueries {
         // a 32-bit prefix collision must not drop a dim)
         val merged = MergeStore.upsertInsertOnly(existing, incoming,
           Seq("c_mktsegment", "c_nationkey"))
-        val path = s"${SnapshotStore.root}/dims_${Paths.get(dir).getFileName}"
+        val path = s"${SnapshotStore.root}/dims_${SnapshotStore.sfName(dir)}"
         MergeStore.writeDim(merged, path)
         s.read.parquet(path).orderBy("c_mktsegment", "c_nationkey")
       },
@@ -436,7 +434,7 @@ object StoreQueries {
     Q("q_stream_replay",
       (s, dir) => {
         val store = SnapshotStore.ensureReplayStore(s, dir)
-        val sink = "stream_replay_" + Paths.get(dir).getFileName.toString.replace('.', '_')
+        val sink = "stream_replay_" + SnapshotStore.sfName(dir).replace('.', '_')
         Replay.windowedReplay(s, store, sink, filesPerBatch = 8)
           .orderBy("bucket_us", "event_type")
       },
@@ -455,7 +453,7 @@ object StoreQueries {
     // q_stream_replay's batch oracle verbatim.
     Q("q_stream_rate",
       (s, dir) => {
-        val sink = "stream_rate_" + Paths.get(dir).getFileName.toString.replace('.', '_')
+        val sink = "stream_rate_" + SnapshotStore.sfName(dir).replace('.', '_')
         Replay.ratePacedReplay(s, dir, sink)
           .orderBy("bucket_us", "event_type")
       },
@@ -544,7 +542,7 @@ object StoreQueries {
     Q("q_stream_traj_state",
       (s, dir) => {
         val store = SnapshotStore.ensureReplayStore(s, dir)
-        val sink = "stream_traj_" + Paths.get(dir).getFileName.toString.replace('.', '_')
+        val sink = "stream_traj_" + SnapshotStore.sfName(dir).replace('.', '_')
         Replay.statefulTrajectoryReplay(s, store, sink).orderBy("k")
       },
       Some("""SELECT CAST(user_id AS VARCHAR) AS k, count(*) AS n_obs,
@@ -1472,7 +1470,7 @@ object StoreQueries {
     * MUTATES its log — it must not share q_time_travel's store). */
   private def ensureVersionedCustLog2(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureCustLog(s, dir, s"${SnapshotStore.root}/custlog2_${Paths.get(dir).getFileName}")
+    ensureCustLog(s, dir, s"${SnapshotStore.root}/custlog2_${SnapshotStore.sfName(dir)}")
 
   /** Idempotent three-commit versioned customer log for q_time_travel
     * (the SnapshotStore.ensure* pattern: build once per JVM+disk
@@ -1480,7 +1478,7 @@ object StoreQueries {
     * wiped and rebuilt). */
   private def ensureVersionedCustLog(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    ensureCustLog(s, dir, s"${SnapshotStore.root}/custlog_${Paths.get(dir).getFileName}")
+    ensureCustLog(s, dir, s"${SnapshotStore.root}/custlog_${SnapshotStore.sfName(dir)}")
 
   private def ensureCustLog(
       s: org.apache.spark.sql.SparkSession, dir: String, path: String): String = synchronized {

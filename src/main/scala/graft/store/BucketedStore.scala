@@ -19,7 +19,7 @@ import graft.sources.Tables
 object BucketedStore {
 
   def bucketedTableName(sfDir: String): String =
-    "events_bucketed_" + java.nio.file.Paths.get(sfDir).getFileName.toString.replace('.', '_')
+    "events_bucketed_" + SnapshotStore.sfName(sfDir).replace('.', '_')
 
   /** Idempotent per-session bucketed events table (saveAsTable — bucket
     * metadata lives in the session catalog). The in-memory catalog forgets
@@ -48,7 +48,7 @@ object BucketedStore {
     spark.table(ensureBucketedEvents(spark, sfDir))
 
   def dimsTableName(sfDir: String): String =
-    "user_dims_bucketed_" + java.nio.file.Paths.get(sfDir).getFileName.toString.replace('.', '_')
+    "user_dims_bucketed_" + SnapshotStore.sfName(sfDir).replace('.', '_')
 
   /** Per-user dim table derived FROM the bucketed events (the aggregation
     * itself plans no Exchange) and written with the SAME bucket count and

@@ -413,8 +413,7 @@ object DeltaLogStore {
     * is exactly what the query checks. Idempotent per sf dir. */
   def ensureOrdersDeltaTable(spark: SparkSession, sfDir: String): String =
     synchronized {
-      val path = s"${SnapshotStore.root}/delta_" +
-        s"${java.nio.file.Paths.get(sfDir).getFileName}_orders"
+      val path = s"${SnapshotStore.root}/delta_${SnapshotStore.sfName(sfDir)}_orders"
       val done = new java.io.File(path, "_GRAFT_DONE")
       if (!done.exists()) {
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))

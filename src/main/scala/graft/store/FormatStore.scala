@@ -31,11 +31,9 @@ import graft.plans.Spread._
   */
 object FormatStore {
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
-
   /** Idempotent lang-partitioned ORC copy of `documents`. */
   def ensureOrcDocuments(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/documents_${sfName(sfDir)}_orc"
+    val path = s"${SnapshotStore.root}/documents_${SnapshotStore.sfName(sfDir)}_orc"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       graft.sources.Tables.documents(spark, sfDir)
         .repartition(col("lang"))
@@ -67,7 +65,7 @@ object FormatStore {
 
   /** Idempotent CSV copy of `events` (header + default quote/escape). */
   def ensureCsvEvents(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_${sfName(sfDir)}_csv"
+    val path = s"${SnapshotStore.root}/events_${SnapshotStore.sfName(sfDir)}_csv"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       // spread before the sink (r16, guide §2.5/§6): the events scan is
       // one row group, so unspread the serialize runs on one core and
@@ -100,7 +98,7 @@ object FormatStore {
     * (quotes, '<', '&') escaped by the writer and restored by the
     * parser. One row element per event under a single root. */
   def ensureXmlEvents(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_${sfName(sfDir)}_xml"
+    val path = s"${SnapshotStore.root}/events_${SnapshotStore.sfName(sfDir)}_xml"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       // spread before the sink (r16, guide §2.5/§6): same rationale as
       // the CSV store — and the XML scan proved NOT to split within a

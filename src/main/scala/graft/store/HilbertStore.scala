@@ -32,10 +32,8 @@ object HilbertStore {
   /** Side of the aligned square each partition dir covers. */
   val BlockSide: Long = 1L << 13
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
-
   def ensureHilbertStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_${sfName(sfDir)}_hilbert"
+    val path = s"${SnapshotStore.root}/events_${SnapshotStore.sfName(sfDir)}_hilbert"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       Tables.events(spark, sfDir)
         .withColumn("gx", ZOrderStore.gridX(col("value")))

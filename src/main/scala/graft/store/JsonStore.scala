@@ -67,14 +67,14 @@ object JsonStore {
     all.filter(col("ts_us") === tsUs).limit(1)
 
   def ensureEventsJsonStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/json_events_${Paths.get(sfDir).getFileName}"
+    val path = s"${SnapshotStore.root}/json_events_${SnapshotStore.sfName(sfDir)}"
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       write(flatEvents(spark, sfDir), path, codec = None)
     path
   }
 
   def ensureConcatAllStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/json_all_${Paths.get(sfDir).getFileName}"
+    val path = s"${SnapshotStore.root}/json_all_${SnapshotStore.sfName(sfDir)}"
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       writeConcatAll(flatEvents(spark, sfDir), path)
     path

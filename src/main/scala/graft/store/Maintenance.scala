@@ -94,7 +94,7 @@ object Maintenance {
   def ensureCompactedEvents(spark: SparkSession, sfDir: String,
       targetFiles: Int): String = synchronized {
     val src = SnapshotStore.ensureEventsStore(spark, sfDir)
-    val path = s"${SnapshotStore.root}/events_compact_${Paths.get(sfDir).getFileName}"
+    val path = s"${SnapshotStore.root}/events_compact_${SnapshotStore.sfName(sfDir)}"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       compact(spark, src, path, targetFiles)
     }
@@ -125,7 +125,7 @@ object Maintenance {
     * partition column, so "which schema wrote this row" stays queryable.
     */
   def ensureEvolvedStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_evolved_${Paths.get(sfDir).getFileName}"
+    val path = s"${SnapshotStore.root}/events_evolved_${SnapshotStore.sfName(sfDir)}"
     if (!Files.exists(Paths.get(path, "_MARKER"))) {
       val ev = Tables.events(spark, sfDir)
         .withColumn("ts_us", expr("unix_micros(ts)"))
@@ -161,7 +161,7 @@ object Maintenance {
     * ingest, and every downstream path access is a cheap navigation of
     * the shredded encoding. */
   def ensureVariantStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_variant_${Paths.get(sfDir).getFileName}"
+    val path = s"${SnapshotStore.root}/events_variant_${SnapshotStore.sfName(sfDir)}"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       Tables.events(spark, sfDir)
         .selectExpr("event_id", "event_type", "parse_json(props) AS props_v")

@@ -40,12 +40,10 @@ object SkipIndexStore {
   /** Signature space: probe-key hash bits per bucket. */
   val Bits = 1 << 16
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
-
   /** Events bucketed by user-hash — the writer's natural clustering,
     * deliberately UNCORRELATED with the lookup key. */
   def ensureSkipStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_${sfName(sfDir)}_skipidx"
+    val path = s"${SnapshotStore.root}/events_${SnapshotStore.sfName(sfDir)}_skipidx"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"),

@@ -71,7 +71,9 @@ object SnapshotStore {
       lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame =
     read(spark, path).filter(col("ts") >= lo && col("ts") < hi)
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
+  /** The scale-factor directory's own name (e.g. `sf0.1`), the key of every
+    * derived store path under [[root]]. */
+  def sfName(sfDir: String): String = Paths.get(sfDir).getFileName.toString
 
   /** Idempotent per-(sf,codec) events store; written once per JVM+disk
     * lifetime, keyed by a _SUCCESS marker. */

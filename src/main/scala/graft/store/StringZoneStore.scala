@@ -39,13 +39,11 @@ object StringZoneStore {
   /** Zone-entry truncation width (chars kept of each min/max). */
   val TruncWidth = 4
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
-
   /** Documents range-clustered by their first text token (the "title
     * key" a corpus store sorts by); doc_id tiebreak keeps buckets
     * balanced under heavy key duplication. */
   def ensureZoneStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/documents_${sfName(sfDir)}_zonestore"
+    val path = s"${SnapshotStore.root}/documents_${SnapshotStore.sfName(sfDir)}_zonestore"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       Tables.documents(spark, sfDir)
         .withColumn("zkey", substring_index(col("text"), " ", 1))

@@ -28,10 +28,8 @@ object ZOrderStore {
   def gridY(userId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     userId.bitwiseAND(lit(0xFFFFL))
 
-  private def sfName(sfDir: String) = Paths.get(sfDir).getFileName.toString
-
   def ensureZEventsStore(spark: SparkSession, sfDir: String): String = synchronized {
-    val path = s"${SnapshotStore.root}/events_${sfName(sfDir)}_zorder"
+    val path = s"${SnapshotStore.root}/events_${SnapshotStore.sfName(sfDir)}_zorder"
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       Tables.events(spark, sfDir)
         .withColumn("gx", gridX(col("value")))

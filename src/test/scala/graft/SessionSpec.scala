@@ -36,17 +36,33 @@ class SessionSpec extends SparkSpec {
     assert(w.shuffleBytes > 0, w)
   }
 
+  /** Each .scala file under `root` (relative to it) with its text. */
+  private def sources(root: Path): Map[String, String] = {
+    val s = Files.walk(root)
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toMap
+    finally s.close()
+  }
+
+  /** Occurrences of `token` per file that holds it. */
+  private def occurrences(files: Map[String, String], token: String): Map[String, Int] =
+    files.map { case (f, text) =>
+      f -> java.util.regex.Pattern.quote(token).r.findAllMatchIn(text).size }
+      .filter(_._2 > 0)
+
   test("only Session builds a SparkSession and only StageCensus adds a listener") {
-    val src = Paths.get("src")
-    val sources: Seq[Path] = {
-      val s = Files.walk(src)
-      try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
-    }
+    val all = sources(Paths.get("src"))
     // the tokens are split so that this file does not match itself
-    def callers(token: String): Set[String] = sources
-      .filter(p => Files.readString(p).contains(token))
-      .map(p => src.relativize(p).toString).toSet
+    def callers(token: String): Set[String] = occurrences(all, token).keySet
     assert(callers("SparkSession" + ".builder") == Set("main/scala/graft/Session.scala"))
     assert(callers("addSpark" + "Listener") == Set("main/scala/graft/StageCensus.scala"))
+  }
+
+  test("one versioned-view fold and one RocksDB provider setting under src/main") {
+    val main = sources(Paths.get("src", "main"))
+    // latestView's definition and the two reads of Replay.foldView: a
+    // hand-copied fold anywhere adds a call
+    assert(occurrences(main, "latestView(") == Map("scala/graft/streaming/Replay.scala" -> 3))
+    assert(occurrences(main, "RocksDBStateStoreProvider").values.sum == 1)
   }
 }

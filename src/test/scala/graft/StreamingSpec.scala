@@ -379,6 +379,57 @@ class StreamingSpec extends SparkSpec {
     assert(v0n < 24, s"first version should be partial, counts $v0n rows")
   }
 
+  /** 30 events of 30 distinct users over three day partitions — one
+    * file each, so filesPerBatch = 1 folds three micro-batches. */
+  private def threeDayStore(prefix: String): String = {
+    val events = (0L until 30L).map { i =>
+      (i, ts(f"2024-01-0${i % 3 + 1}%d 10:15:00"), if (i % 2 == 0) "a" else "b", 1.0, i + 100L)
+    }.toDF("event_id", "ts", "event_type", "value", "user_id")
+    val path = targetTmp(prefix)
+    events.withColumn("bucket", SnapshotStore.dayBucketExpr($"ts"))
+      .repartition($"bucket")
+      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    path
+  }
+
+  test("kmv replay: multi-batch bottom-k merge equals the single-pass sketch") {
+    import graft.operators.Approx
+    val path = threeDayStore("kmvview")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"rank", hex($"h"), $"value").orderBy("rank")
+        .as[(Long, String, Long)].collect().toSeq
+    val store = spark.read.parquet(path)
+    val want = rows(Approx.kmvSketch(store, $"user_id", lit(0), 4))
+    // the answer spans the batches: no single day's bottom-k is it, so a
+    // fold that kept only one batch's partial cannot pass
+    val days = store.select($"bucket").distinct().as[String].collect()
+    assert(days.length == 3)
+    days.foreach { d =>
+      assert(rows(Approx.kmvSketch(store.filter($"bucket" === d), $"user_id", lit(0), 4)) != want)
+    }
+    val got = rows(Replay.kmvReplay(spark, path, path + "_kmv_view", k = 4, filesPerBatch = 1))
+    assert(got == want, s"got=$got want=$want")
+  }
+
+  test("reservoir replay: multi-batch bottom-k merge equals the k smallest md5(event_id)") {
+    val path = threeDayStore("rsvview")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(hex($"h"), $"event_id", $"user_id", $"event_type")
+        .as[(String, Long, Long, String)].collect().toSeq
+    def bottom(df: org.apache.spark.sql.DataFrame) =
+      rows(df.select(md5($"event_id".cast("string").cast("binary")).as("h"),
+          $"event_id", $"user_id", $"event_type")
+        .orderBy($"h", $"event_id").limit(5))
+    val store = spark.read.parquet(path)
+    val want = bottom(store)
+    val days = store.select($"bucket").distinct().as[String].collect()
+    assert(days.length == 3)
+    days.foreach(d => assert(bottom(store.filter($"bucket" === d)) != want))
+    val got = rows(Replay.reservoirReplay(spark, path, path + "_rsv_view", k = 5,
+      filesPerBatch = 1))
+    assert(got == want, s"got=$got want=$want")
+  }
+
   test("latestView: replayed batch never sees its own crashed attempt; uncommitted ignored") {
     val root = targetTmp("views")
     Seq(0L, 1L, 2L).foreach { v =>
@@ -1007,6 +1058,23 @@ class StreamingSpec extends SparkSpec {
     val buckets = new java.io.File(idxPath).listFiles()
       .filter(_.getName.startsWith("ibucket=")).map(_.getName).sorted
     assert(buckets.toSeq == (0 to 5).map(b => s"ibucket=$b"))
+  }
+
+  test("ratePacedReplay: a failing query surfaces its exception, not a poll timeout") {
+    val dir = targetTmp("ratefail")
+    // two 9e15 values in one (hour, type) group: their value_mils
+    // (9e18 each) overflow the long sum, so the query dies in a task
+    val events = (1L to 6L).map { i =>
+      (i, ts("2024-01-01 09:15:00"), "a", if (i <= 2) 9e15 else 1.0)
+    }.toDF("event_id", "ts", "event_type", "value")
+    events.coalesce(1).write.parquet(s"$dir/events.parquet")
+    val t0 = System.nanoTime()
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Replay.ratePacedReplay(spark, dir, "t_rate_fail")
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    // the poll deadline is 300 s; a dead query must end the poll at once
+    assert(secs < 60, s"exception surfaced after $secs s")
   }
 }
 
