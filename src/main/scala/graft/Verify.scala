@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/check.py).
+  * A query that throws is named in failed.json, and Verify exits 1 once
+  * both manifests are written. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -13,13 +15,16 @@ object Verify {
                    else SparkEntry.queries.filter(kv => only(kv._1))
     val spark = Session.local()
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
-    }
+    }.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -45,6 +50,12 @@ object Verify {
     // (no output dir) as a failure instead of silently skipping it.
     Files.writeString(Paths.get(s"$outDir/queries.json"),
       selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      failed.map(q).mkString("[", ",", "]"))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,9 +1,5 @@
 package graft.plans
 
-import java.time.Instant
-import java.time.format.DateTimeFormatter
-import java.time.ZoneId
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -33,10 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object DeriveBucketPredicate extends Rule[LogicalPlan] with PredicateHelper {
 
-  private def bucketOf(micros: Long, zone: String): UTF8String = {
-    val fmt = DateTimeFormatter.ofPattern("yyyy-MM-dd-HH").withZone(ZoneId.of(zone))
-    UTF8String.fromString(fmt.format(Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L))))
-  }
+  private def bucketOf(micros: Long, zone: String): UTF8String =
+    UTF8String.fromString(graft.store.SnapshotStore.bucketOf(micros, zone))
 
   private def isTs(e: Expression): Boolean = e match {
     case a: AttributeReference => a.name == "ts" && a.dataType == TimestampType

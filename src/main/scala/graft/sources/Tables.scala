@@ -36,8 +36,9 @@ object Tables {
     * captures hadoop conf lazily), so a set/restore scope would break the
     * read. Graft's own entrypoints (Verify/Bench/tests) also set it at
     * session build; this set is a safety net for driver-owned sessions.
-    * It only affects parquet files that physically carry TIMESTAMP(NANOS)
-    * — all graft-written stores use µs. */
+    * It only affects parquet files that physically carry TIMESTAMP(NANOS).
+    * Graft-written stores never do: they keep Spark's default
+    * `outputTimestampType`, INT96, which carries no min/max statistics. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")

@@ -387,7 +387,9 @@ object DeltaLogStore {
 
   /** Read the table snapshot `VERSION AS OF versionAsOf` (None = latest):
     * resolve the live file set from the log, then a plain parquet scan
-    * over exactly those files — pushdown and pruning intact. */
+    * over exactly those files — pushdown and pruning intact. The schema
+    * is the first live file's footer, the one file Spark's own inference
+    * would read with `mergeSchema` off. */
   def read(
       spark: SparkSession,
       tablePath: String,
@@ -398,7 +400,8 @@ object DeltaLogStore {
     val files = snapshotFiles(spark, tablePath, versionAsOf)
       .select("path").collect().map(r => s"$tablePath/${r.getString(0)}")
     require(files.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
-    spark.read.parquet(files.toIndexedSeq: _*)
+    spark.read.schema(SnapshotStore.footerSchema(spark, files.head))
+      .parquet(files.toIndexedSeq: _*)
   }
 
   /** The q_delta_log fixture: a 4-commit Delta table over orders slices

@@ -1,9 +1,18 @@
 package graft.store
 
+import java.io.File
 import java.nio.file.{Files, Paths}
+import java.time.{Instant, ZoneId}
+import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampType}
 
 import graft.sources.Tables
 
@@ -20,6 +29,15 @@ import graft.sources.Tables
   * bucket dir (no read-modify-write — the reference re-concatenates the
   * whole bucket per append, apache_parquet.py:62-103; Spark appends are
   * O(new data)).
+  *
+  * Reads build their relation from what the driver can see for itself.
+  * The schema comes from one data file's footer ([[footerSchema]]), so no
+  * inference job runs. [[rangeScan]] folds its bounds to literals, renders
+  * their hours with [[bucketOf]] and lists the store root once, keeping
+  * only the `bucket=` directories in range; [[lookupBucket]] names its one
+  * directory. Those directories alone are read (`basePath` = the store
+  * root, so `bucket` stays a partition column). Nothing is cached: every
+  * call lists afresh and sees the last append.
   */
 object SnapshotStore {
 
@@ -34,10 +52,17 @@ object SnapshotStore {
     f.delete(); ()
   }
 
-  def bucketExpr(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def bucketExpr(ts: Column): Column =
     date_format(date_trunc("hour", ts), "yyyy-MM-dd-HH")
 
-  def dayBucketExpr(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  /** The driver-side twin of [[bucketExpr]]: the hour bucket of an instant
+    * (epoch µs) rendered in `zone`, the session time zone the store's
+    * writer rendered its buckets in. */
+  def bucketOf(micros: Long, zone: String): String =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd-HH").withZone(ZoneId.of(zone))
+      .format(Instant.ofEpochSecond(Math.floorDiv(micros, 1000000L)))
+
+  def dayBucketExpr(ts: Column): Column =
     date_format(date_trunc("day", ts), "yyyy-MM-dd")
 
   /** Write a flat frame as an hour-partitioned store. The repartition on
@@ -53,23 +78,80 @@ object SnapshotStore {
       .mode("overwrite")
       .parquet(path)
 
-  def read(spark: SparkSession, path: String): DataFrame = {
-    graft.plans.GraftRules.install(spark)
-    spark.read.parquet(path)
+  /** Spark's own row schema of one parquet data file, read from its footer
+    * on the driver: the `org.apache.spark.sql.parquet.row.metadata` entry
+    * every Spark writer stores. It is the footer and the entry Spark's
+    * schema-inference job reads when `mergeSchema` is off. */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(file), spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+    require(json != null, s"$file carries no Spark row schema in its footer")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Point/bucket lookup: equality on the partition column prunes to one
-    * hour directory (PartitionFilters in the physical plan). */
-  def lookupBucket(spark: SparkSession, path: String, bucket: String): DataFrame =
-    read(spark, path).filter(col("bucket") === bucket)
+  private def bucketDirs(path: String): Seq[File] =
+    Option(new File(path).listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+      .sortBy(_.getName)
 
-  /** Time-range scan: only the ts bounds are written here — the bucket
-    * partition predicate is DERIVED by the DeriveBucketPredicate optimizer
-    * rule (installed by read()), so hour directories prune and the ts
-    * filter pushes to parquet row groups. */
-  def rangeScan(spark: SparkSession, path: String,
-      lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column): DataFrame =
-    read(spark, path).filter(col("ts") >= lo && col("ts") < hi)
+  /** The store's read schema: the data columns of the first data file's
+    * footer, then `bucket: string`, the order and types Spark's inference
+    * and partition discovery give the same store. */
+  private def storeSchema(spark: SparkSession, path: String, dirs: Seq[File]): StructType = {
+    val file = dirs.iterator
+      .flatMap(d => d.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet")))
+      .nextOption()
+      .getOrElse(throw new IllegalArgumentException(s"no parquet data file in store $path"))
+    footerSchema(spark, file.getPath).add("bucket", StringType)
+  }
+
+  def read(spark: SparkSession, path: String): DataFrame = {
+    graft.plans.GraftRules.install(spark)
+    spark.read.schema(storeSchema(spark, path, bucketDirs(path))).parquet(path)
+  }
+
+  /** The store's rows from the hour directories in [lo, hi] alone. */
+  private def readBuckets(spark: SparkSession, path: String, lo: String, hi: String): DataFrame = {
+    graft.plans.GraftRules.install(spark)
+    val dirs = bucketDirs(path)
+    val hit = dirs.filter { d =>
+      val b = d.getName.stripPrefix("bucket=")
+      b >= lo && b <= hi
+    }
+    spark.read.schema(storeSchema(spark, path, dirs)).option("basePath", path)
+      .parquet(hit.map(_.getPath): _*)
+  }
+
+  /** Point/bucket lookup: reads the one hour directory, and the equality
+    * on the partition column stays in the plan (PartitionFilters). */
+  def lookupBucket(spark: SparkSession, path: String, bucket: String): DataFrame =
+    readBuckets(spark, path, bucket, bucket).filter(col("bucket") === bucket)
+
+  /** Time-range scan over [lo, hi): the bounds must fold to constants.
+    * Only the hour directories from bucketOf(lo) to bucketOf(hi − 1 µs)
+    * are listed and read; DeriveBucketPredicate (installed with the read)
+    * still derives the bucket predicate from the ts filter, which pushes
+    * to parquet row groups. */
+  def rangeScan(spark: SparkSession, path: String, lo: Column, hi: Column): DataFrame = {
+    val (loUs, hiUs) = foldBounds(spark, lo, hi)
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    readBuckets(spark, path, bucketOf(loUs, zone), bucketOf(hiUs - 1, zone))
+      .filter(col("ts") >= lo && col("ts") < hi)
+  }
+
+  /** Both bounds as epoch µs, folded by the optimizer on the driver (no job
+    * runs); a bound that is not a constant timestamp fails. */
+  private def foldBounds(spark: SparkSession, lo: Column, hi: Column): (Long, Long) =
+    spark.range(1).select(lo.cast("timestamp"), hi.cast("timestamp"))
+      .queryExecution.optimizedPlan match {
+      case Project(Seq(Alias(Literal(l: Long, TimestampType), _),
+          Alias(Literal(h: Long, TimestampType), _)), _) => (l, h)
+      case other => throw new IllegalArgumentException(
+        s"rangeScan bounds must be constant timestamps: $lo, $hi (folded to $other)")
+    }
 
   /** The scale-factor directory's own name (e.g. `sf0.1`), the key of every
     * derived store path under [[root]]. */

@@ -167,7 +167,8 @@ object Staging {
       }
     }
     touchedPaths.synchronized { touchedPaths += dir.getName; () }
-    df.sparkSession.read.parquet(path)
+    // the stage key pins the plan, so `df.schema` is the schema on disk
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   // Cold-cost attribution (VERDICT r7 Next #7): cumulative wall time and

@@ -41,6 +41,84 @@ class StoreSpec extends SparkSpec {
     assert(!scanned.contains("2024-01-02"))
   }
 
+  private lazy val census = StageCensus.install(spark)
+
+  /** Two rows in each of `hours` consecutive hours from 2024-01-01 00:00
+    * UTC, at :15 and :45. */
+  private def hourly(hours: Int) =
+    (0 until hours).flatMap { h =>
+      Seq(15, 45).map(m =>
+        (h * 100L + m, new Timestamp(1704067200000L + (h * 60L + m) * 60000L), h.toDouble))
+    }.toDF("id", "ts", "v")
+
+  private def tsLit(s: String) = lit(s).cast("timestamp")
+
+  private def assertSameFrame(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    assert(got.collect().toSet == want.collect().toSet)
+  }
+
+  test("rangeScan and lookupBucket run no job to build and equal a filtered full read") {
+    val path = targetTmp("hours")
+    SnapshotStore.write(hourly(40), path, "ts")
+    val full = SnapshotStore.read(spark, path)
+    // the footer schema is the schema Spark infers, nullability and order included
+    assert(full.schema == spark.read.parquet(path).schema)
+    Seq(
+      ("2024-01-01 05:00:00", "2024-01-01 06:00:00", 2), // one hour
+      ("2024-01-01 05:30:00", "2024-01-02 05:30:00", 48), // 24 hours, mid-hour bounds
+      ("2024-02-01 00:00:00", "2024-02-02 00:00:00", 0)  // no stored hour
+    ).foreach { case (lo, hi, n) =>
+      val (scan, built) = census.measure(
+        SnapshotStore.rangeScan(spark, path, tsLit(lo), tsLit(hi)))
+      assert(built.stages.isEmpty, s"[$lo, $hi): ${built.stages}")
+      assertSameFrame(scan, full.filter($"ts" >= tsLit(lo) && $"ts" < tsLit(hi)))
+      assert(scan.count() == n, s"[$lo, $hi)")
+    }
+    Seq(("2024-01-01-05", 2), ("2024-02-01-00", 0)).foreach { case (b, n) =>
+      val (lookup, built) = census.measure(SnapshotStore.lookupBucket(spark, path, b))
+      assert(built.stages.isEmpty, s"$b: ${built.stages}")
+      assertSameFrame(lookup, full.filter($"bucket" === b))
+      assert(lookup.count() == n, b)
+    }
+  }
+
+  test("rangeScan lists afresh: an append into a new hour shows in the next scan") {
+    val path = targetTmp("hours")
+    SnapshotStore.write(hourly(2), path, "ts")
+    val (lo, hi) = (tsLit("2024-01-01 05:00:00"), tsLit("2024-01-01 06:00:00"))
+    assert(SnapshotStore.rangeScan(spark, path, lo, hi).count() == 0)
+    hourly(6).filter($"ts" >= lo && $"ts" < hi)
+      .withColumn("bucket", SnapshotStore.bucketExpr($"ts"))
+      .write.partitionBy("bucket").mode("append").parquet(path)
+    assert(SnapshotStore.rangeScan(spark, path, lo, hi).select($"id").as[Long]
+      .collect().toSet == Set(515L, 545L))
+  }
+
+  test("rangeScan renders buckets in the session zone (half-hour offset)") {
+    val path = targetTmp("hours")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try {
+      SnapshotStore.write(hourly(24), path, "ts")
+      // 16:00–17:00 IST is 10:30–11:30 UTC: both rows sit in bucket -16
+      val (lo, hi) = (tsLit("2024-01-01 16:00:00"), tsLit("2024-01-01 17:00:00"))
+      val scan = SnapshotStore.rangeScan(spark, path, lo, hi)
+      assertSameFrame(scan, SnapshotStore.read(spark, path).filter($"ts" >= lo && $"ts" < hi))
+      assert(scan.select($"id").as[Long].collect().toSet == Set(1045L, 1115L))
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("rangeScan refuses bounds that do not fold to constants") {
+    val path = targetTmp("hours")
+    SnapshotStore.write(hourly(2), path, "ts")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotStore.rangeScan(spark, path,
+        timestamp_micros((rand() * 1e9).cast("long")), tsLit("2024-01-02 00:00:00"))
+    }
+    assert(e.getMessage.contains("constant timestamps"), e.getMessage)
+  }
+
   test("one file per hour bucket (repartition before partitionBy)") {
     val path = targetTmp("snap")
     SnapshotStore.write(events, path, "ts")
@@ -606,6 +684,8 @@ class StoreSpec extends SparkSpec {
       .collect().toSet == Set((1L, "a"), (2L, "b")))
     assert(DeltaLogStore.read(spark, path).as[(Long, String)]
       .collect().toSet == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    // the footer schema is the schema Spark infers from the same files
+    assert(DeltaLogStore.read(spark, path).schema == spark.read.parquet(path).schema)
     // OPTIMIZE-style rewrite: remove v0's file, re-add same rows compacted
     val f0 = DeltaLogStore.snapshotFiles(spark, path, Some(0L))
       .select("path").as[String].collect().toSeq
