@@ -189,7 +189,8 @@ object Multimodal {
     * for the downstream block join is: in-bucket candidate volume
     * ≈ n²·blocks/2^width (width = nbits/blocks), so block WIDTH — not
     * fingerprint width alone — decides whether candidates grow linearly.
-    * Measured on 5× unique docs (ScaleProbe): 8-bit keys (32-bit/4-block)
+    * Measured on 5× unique docs (the scale probe, last held in commit
+    * `9188937`): 8-bit keys (32-bit/4-block)
     * 13×, 10-bit keys (64-bit/6-block) 12×, 16-bit keys (64-bit/4-block,
     * hamming ≤ 3) 5.9× ≈ linear. Radius trades against width through the
     * pigeonhole bound (maxHamming ≤ blocks−1); at a larger corpus, widen

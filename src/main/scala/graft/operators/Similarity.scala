@@ -566,8 +566,9 @@ object Similarity {
   // sparse physics a production embedding corpus runs at. The fixture
   // below PLANTS cluster structure deterministically in BOTH engines;
   // the clustered twins then derive their operating point from a design
-  // table instead of hardcoded defaults, and ScaleProbe prices the 5x
-  // shuffle growth of the sparse regime.)
+  // table instead of hardcoded defaults, and the 5x scale probe (last
+  // held in commit `9188937`) priced the shuffle growth of the sparse
+  // regime.)
 
   /** Clusters for an n-vector corpus: bounded cluster SIZE (~256), not
     * bounded cluster count — the property that makes a clustered corpus

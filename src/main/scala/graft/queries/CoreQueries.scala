@@ -596,10 +596,10 @@ object CoreQueries {
              |       value
              |FROM d ORDER BY code""".stripMargin)),
 
-    // ONE-SCAN table profile of lineitem (ANALYZE-TABLE): per column the
-    // row/null/exact-NDV counts from a single stack-unpivot pass —
-    // C per-column scans would read the table C times. String cast is
-    // injective per atomic type, so NDV is exact; oracle = one
+    // Table profile of lineitem (ANALYZE-TABLE): per column the
+    // row/null/exact-NDV counts from one aggregate branch per column,
+    // unioned — each branch scans only its own parquet column and counts
+    // distinct values on the native type, so NDV is exact; oracle = one
     // per-column SELECT each, unioned.
     Q("q_profile_table",
       (s, dir) => {

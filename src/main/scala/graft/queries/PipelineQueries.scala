@@ -1808,8 +1808,9 @@ object PipelineQueries {
     // regime a production embedding corpus actually exhibits) and run
     // the SAME machinery sparse: the design table derives the operating
     // point, the IVF side probes one planted cluster per vector, and
-    // ScaleProbe prices the 5x shuffle growth (bounded cluster size =>
-    // candidate volume linear in n).
+    // the 5x scale probe (last held in commit `9188937`) priced the
+    // shuffle growth (bounded cluster size => candidate volume linear
+    // in n).
 
     // The rhp-LSH design table on the clustered fixture's deterministic
     // id-residue sample: per (nbits, bands) config, candidate volume vs
@@ -4297,9 +4298,10 @@ object PipelineQueries {
     // candidate volume is Σ|bucket|² ≈ n²·blocks/2^width, so block WIDTH
     // is the scale knob — 16-bit keys measured 5.9× candidates on 5×
     // unique docs where the 10-bit keys of the 6-block/radius-5 point
-    // ran 12× (and the 32-bit family's 8-bit keys 13×; see ScaleProbe +
-    // BUILDER_NOTES round 6). Radius trades against width through the
-    // pigeonhole bound (maxHamming ≤ blocks−1). xxhash64 isn't
+    // ran 12× (and the 32-bit family's 8-bit keys 13×; see the scale
+    // probe, last held in commit `9188937`, and BUILDER_NOTES round 6).
+    // Radius trades against width through the pigeonhole bound
+    // (maxHamming ≤ blocks−1). xxhash64 isn't
     // replayable in the oracle engine, so like q_dedup_simhash_neardup64
     // the checked output is the planted byte-exact dups (fingerprint
     // equality is deterministic for identical bytes ⇒ hamming 0, always

@@ -238,7 +238,7 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("profileTable: one-scan null/NDV census matches per-column brute") {
+  test("profileTable: per-column-branch null/NDV census matches per-column brute") {
     import graft.operators.Normalize
     val df = Seq[(java.lang.Long, String, java.lang.Double)](
       (1L, "x", 1.5), (2L, "x", null), (2L, null, 2.5),

@@ -58,6 +58,13 @@ class SessionSpec extends SparkSpec {
     assert(callers("addSpark" + "Listener") == Set("main/scala/graft/StageCensus.scala"))
   }
 
+  test("the only mains under src/main are Bench, Verify, Profile, PlanDump and Scratch") {
+    val main = sources(Paths.get("src", "main"))
+    // a one-off probe main belongs in Profile or a scratch copy, not here
+    assert(occurrences(main, "def main(").keySet ==
+      Set("Bench", "Verify", "Profile", "PlanDump", "Scratch").map(n => s"scala/graft/$n.scala"))
+  }
+
   test("one versioned-view fold and one RocksDB provider setting under src/main") {
     val main = sources(Paths.get("src", "main"))
     // latestView's definition and the two reads of Replay.foldView: a
