@@ -143,7 +143,8 @@ object StoreQueries {
     // over orders slices — append (v0, v1), OPTIMIZE-style rewrite
     // (v2 removes v0's two files, re-adds the same rows as one compacted
     // file) and append again (v3). The query reads the snapshot VERSION
-    // AS OF each v through the distributed JSON action scan and reports
+    // AS OF each v, its live files resolved from the log on the driver
+    // (checkpoint + JSON commits, no Spark job), and reports
     // rows/sum (must be invariant under the v2 rewrite) plus the live
     // FILE count (must see the rewrite: 2/3/2/3). The oracle replays the
     // slice algebra; file counts are protocol constants of the fixture.

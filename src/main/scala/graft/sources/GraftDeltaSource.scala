@@ -38,7 +38,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The snapshot is resolved ONCE per read (ADVICE r13): Spark calls
   * `inferSchema` and then `getTable` on the same provider instance, and
-  * each used to re-resolve the log — two driver collects, and with
+  * each used to re-resolve the log — two resolutions, and with
   * `versionAsOf` absent a commit landing between the calls could pair the
   * old snapshot's schema with the new snapshot's file list. The provider
   * now pins the version at first resolution and caches the built table
@@ -134,14 +134,13 @@ private[sources] class GraftDeltaTable(
   // ADVICE r14); any read attempt fails in newScanBuilder
   private val notYetCreated = asOf < 0
 
-  // bounded driver-side collect: file METADATA (the same cardinality
-  // every parquet scan's driver file listing carries), resolved once at
-  // table construction — schema and file list come from the SAME snapshot
+  // the live file list, resolved from the log on the driver (no Spark
+  // job) once at table construction — schema and file list come from the
+  // SAME snapshot
   private val files: Seq[String] =
     if (notYetCreated) Nil
-    else graft.store.DeltaLogStore
-      .snapshotFiles(spark, tablePath, Some(asOf))
-      .select("path").collect().map(r => s"$tablePath/${r.getString(0)}").toIndexedSeq
+    else graft.store.DeltaLogStore.liveFiles(spark, tablePath, Some(asOf))
+      .map(p => s"$tablePath/$p")
 
   private val parquet: Option[ParquetTable] =
     if (files.isEmpty) None
@@ -220,9 +219,7 @@ private[sources] class GraftDeltaTable(
               val head = graft.store.DeltaLogStore.latestVersion(tablePath)
               val removes =
                 if (head < 0 || !(overwrite || legacyOverwrite)) Nil
-                else graft.store.DeltaLogStore
-                  .snapshotFiles(session, tablePath, Some(head))
-                  .select("path").collect().map(_.getString(0)).toSeq
+                else graft.store.DeltaLogStore.liveFiles(session, tablePath, Some(head))
               graft.store.DeltaLogStore.commit(session, tablePath,
                 Some(data), head + 1, removePaths = removes,
                 checkpointEvery = checkpointEvery)

@@ -1,6 +1,17 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -23,12 +34,9 @@ import org.apache.spark.sql.types._
   * exactly the public classic-checkpoint schema) and
   * `_delta_log/_last_checkpoint` records `{"version":v,"size":n}`. The
   * read path resolves from the newest checkpoint at-or-below the
-  * requested version plus an EXPLICIT list of the JSON commits after it
-  * — at 100 TB a table has 10⁵⁺ commits and readers must not list or
-  * parse them all; with a checkpoint every 10 commits the JSON scan is
-  * ≤ 9 files regardless of history depth, and [[cleanupLog]] (Delta's
-  * metadata-retention cleanup) may delete the JSON the checkpoint
-  * covers entirely.
+  * requested version plus an EXPLICIT list of the JSON commits after
+  * it, so [[cleanupLog]] (Delta's metadata-retention cleanup) may delete
+  * the JSON the checkpoint covers entirely.
   *
   * Scope (documented, honest): no column-mapping/deletion-vector reader
   * features (protocol minReaderVersion 1), no multi-part or v2
@@ -36,12 +44,14 @@ import org.apache.spark.sql.types._
   * append/rewrite table; a simple table written by delta-spark (reader
   * version 1) is readable here.
   *
-  * Scale notes: the log scan is a DISTRIBUTED schema'd JSON read (log
-  * files can number in the millions at 100 TB — they never collect);
-  * live-set resolution is an argmax over the FILE-count-sized action
-  * frame (files, not rows); the data read is a plain parquet scan, so
-  * predicate pushdown and column pruning are untouched by the log
-  * layer. */
+  * Scale notes: resolution runs on the driver and starts no Spark job:
+  * one listing of `_delta_log`, the checkpoint read with parquet-mr, the
+  * commits after it (fewer than `checkpointEvery`; at 100 TB a table has
+  * 10⁵⁺ commits, never all read) with Jackson, then a fold keeping each
+  * path's last action. It returns file metadata — the list a parquet
+  * scan's file index holds on the driver anyway. The data read is a
+  * plain parquet scan, so pushdown and column pruning are untouched by
+  * the log layer. */
 object DeltaLogStore {
 
   private def logDir(tablePath: String) = s"$tablePath/_delta_log"
@@ -81,7 +91,7 @@ object DeltaLogStore {
         val moved = parts.zipWithIndex.map { case (p, i) =>
           val name = f"part-v$version%05d-$i%04d.snappy.parquet"
           val dst = new java.io.File(tablePath, name)
-          java.nio.file.Files.move(p.toPath, dst.toPath)
+          Files.move(p.toPath, dst.toPath)
           (name, dst.length())
         }
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
@@ -90,8 +100,7 @@ object DeltaLogStore {
     val header =
       if (version == 0L) {
         val schemaJson = df.map(_.schema.json).getOrElse(new StructType().json)
-        val tid = java.util.UUID.nameUUIDFromBytes(
-          tablePath.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
+        val tid = java.util.UUID.nameUUIDFromBytes(tablePath.getBytes(UTF_8)).toString
         Seq(
           """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
           s"""{"metaData":{"id":"$tid","format":{"provider":"parquet","options":{}},""" +
@@ -106,9 +115,8 @@ object DeltaLogStore {
         s""""modificationTime":$now,"dataChange":true}}"""
     }
     val tmpCommit = new java.io.File(logDir(tablePath), f".$version%020d.json.tmp")
-    java.nio.file.Files.write(tmpCommit.toPath,
-      (header ++ removes ++ adds).mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Files.write(tmpCommit.toPath,
+      (header ++ removes ++ adds).mkString("", "\n", "\n").getBytes(UTF_8))
     // atomic rename = the Delta commit point (mutual exclusion on a real
     // object store needs a LogStore; local rename-if-absent suffices here)
     require(tmpCommit.renameTo(target), s"commit rename failed: $target")
@@ -128,14 +136,6 @@ object DeltaLogStore {
       case c => c.toString
     } + "\""
 
-  private val actionSchema = new StructType()
-    .add("add", new StructType()
-      .add("path", StringType).add("size", LongType)
-      .add("modificationTime", LongType).add("dataChange", BooleanType))
-    .add("remove", new StructType()
-      .add("path", StringType).add("deletionTimestamp", LongType)
-      .add("dataChange", BooleanType))
-
   // classic single-file checkpoint schema (public Delta protocol): one
   // action per row, exactly one of the four structs non-null
   private val protocolDdl = "STRUCT<minReaderVersion: INT, minWriterVersion: INT>"
@@ -148,103 +148,143 @@ object DeltaLogStore {
     "size: BIGINT, modificationTime: BIGINT, dataChange: BOOLEAN>"
   private val removeDdl =
     "STRUCT<path: STRING, deletionTimestamp: BIGINT, dataChange: BOOLEAN>"
-  private val pmSchema = StructType.fromDDL(
-    s"protocol $protocolDdl, metaData $metaDdl")
+  private val pmSchema = StructType.fromDDL(s"protocol $protocolDdl, metaData $metaDdl")
+  private val stateSchema = StructType.fromDDL(s"add $addDdl, remove $removeDdl")
 
   private def checkpointFile(tablePath: String, version: Long) =
     new java.io.File(logDir(tablePath), f"$version%020d.checkpoint.parquet")
 
-  /** Versions with a completed checkpoint file, ascending. */
-  def checkpointVersions(tablePath: String): Seq[Long] = {
-    val files = Option(new java.io.File(logDir(tablePath)).listFiles())
-      .getOrElse(Array.empty)
-    files.map(_.getName).filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
-      .map(_.stripSuffix(".checkpoint.parquet").toLong).sorted.toSeq
+  /** One listing of `_delta_log`: the versions of its JSON commits and of
+    * its completed checkpoints, each ascending. */
+  private final case class LogListing(commits: Seq[Long], checkpoints: Seq[Long]) {
+    def latest: Long = (commits ++ checkpoints).foldLeft(-1L)(math.max)
   }
+
+  private def listLog(tablePath: String): LogListing = {
+    val names = Option(new java.io.File(logDir(tablePath)).list()).toSeq.flatten
+    def versions(suffix: String) =
+      names.filter(_.matches(raw"\d{20}\Q$suffix\E")).map(_.take(20).toLong).sorted
+    LogListing(versions(".json"), versions(".checkpoint.parquet"))
+  }
+
+  /** Versions with a completed checkpoint file, ascending. */
+  def checkpointVersions(tablePath: String): Seq[Long] = listLog(tablePath).checkpoints
 
   /** Latest committed version — JSON commits OR checkpoints (after
     * [[cleanupLog]] the checkpoint may be the only trace of old
     * versions), or -1 for an empty/absent log. */
-  def latestVersion(tablePath: String): Long = {
-    val files = Option(new java.io.File(logDir(tablePath)).listFiles()).getOrElse(Array.empty)
-    val vs = files.map(_.getName).filter(_.matches("\\d{20}\\.json"))
-      .map(_.stripSuffix(".json").toLong) ++ checkpointVersions(tablePath)
-    if (vs.isEmpty) -1L else vs.max
+  def latestVersion(tablePath: String): Long = listLog(tablePath).latest
+
+  /** Read access to one action's fields, from a checkpoint row or a
+    * commit line; an absent or null field is `None`. */
+  private trait Fields {
+    def struct(name: String): Option[Fields]
+    def string(name: String): Option[String]
+    def long(name: String): Option[Long]
+  }
+  private final class RowFields(g: Group) extends Fields {
+    private def has(n: String) = g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+    def struct(n: String) = Option.when(has(n))(new RowFields(g.getGroup(n, 0)))
+    def string(n: String) = Option.when(has(n))(g.getString(n, 0))
+    def long(n: String) = Option.when(has(n))(g.getLong(n, 0))
+  }
+  private final class JsonFields(j: JsonNode) extends Fields {
+    private def get(n: String) = Option(j.get(n)).filterNot(_.isNull)
+    def struct(n: String) = get(n).map(new JsonFields(_))
+    def string(n: String) = get(n).map(_.asText)
+    def long(n: String) = get(n).map(_.asLong)
   }
 
-  /** Per-path LAST action at or below `asOf`: (path, is_add, size,
-    * mod_ts, del_ts, v). Resolution is checkpoint-aware: with a
-    * checkpoint at cv <= asOf, the base state is the checkpoint parquet
-    * (all its actions stamped `_v = cv`) plus an EXPLICIT list of the
-    * JSON commits (cv, asOf] — bounded by the checkpoint interval, never
-    * by history depth; without one, the original distributed glob scan.
-    * The argmax is last-action-wins per path (a single commit never both
-    * adds and removes one path — Delta's reconciliation invariant). */
-  private def lastActions(
-      spark: SparkSession,
-      tablePath: String,
-      asOf: Long): DataFrame = {
-    def shred(actions: DataFrame): DataFrame = actions
-      .select(col("_v"),
-        coalesce(col("add.path"), col("remove.path")).as("path"),
-        col("add.path").isNotNull.as("_isAdd"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("_mod"),
-        col("remove.deletionTimestamp").as("_del"))
-      .filter(col("path").isNotNull)
-    val cpv = checkpointVersions(tablePath).filter(_ <= asOf).lastOption
-    val events = cpv match {
+  private val mapper = new ObjectMapper()
+
+  /** The actions of one log file, read on the driver: the rows of a
+    * checkpoint (parquet-mr) or the lines of a JSON commit (Jackson). */
+  private def logActions(spark: SparkSession, file: java.io.File): Seq[Fields] =
+    if (file.getName.endsWith(".parquet")) {
+      val reader = ParquetReader.builder(new GroupReadSupport(), new Path(file.toString))
+        .withConf(spark.sparkContext.hadoopConfiguration).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null)
+        .map(new RowFields(_)).toList
+      finally reader.close()
+    } else
+      Files.readAllLines(file.toPath, UTF_8).asScala.toList
+        .filter(_.trim.nonEmpty).map(l => new JsonFields(mapper.readTree(l)))
+
+  /** A data file's action as the log resolves it: the version that
+    * carries it, add or remove, and the fields a checkpoint keeps. */
+  private final case class FileAction(
+      v: Long, path: String, isAdd: Boolean,
+      size: Option[Long], mod: Option[Long], del: Option[Long])
+
+  private def fileAction(v: Long, a: Fields): Option[FileAction] =
+    a.struct("add").flatMap(f => f.string("path").map(p =>
+      FileAction(v, p, isAdd = true, f.long("size"), f.long("modificationTime"), None)))
+      .orElse(a.struct("remove").flatMap(f => f.string("path").map(p =>
+        FileAction(v, p, isAdd = false, None, None, f.long("deletionTimestamp")))))
+
+  private def boxed(o: Option[Long]): java.lang.Long = o.map(Long.box).orNull
+
+  /** Where resolution at `asOf` starts: the newest checkpoint at or
+    * below it, else the version-0 commit. ADVICE r13: after [[cleanupLog]]
+    * a version below the retained checkpoint has no JSON left and must
+    * fail loudly, not fold zero commits into an empty file set. */
+  private def base(log: LogListing, tablePath: String, asOf: Long): (Long, java.io.File) =
+    log.checkpoints.filter(_ <= asOf).lastOption match {
+      case Some(cv) => (cv, checkpointFile(tablePath, cv))
       case None =>
-        // ADVICE r13: after [[cleanupLog]], versions below the retained
-        // checkpoint have no JSON left — resolving one must fail loudly,
-        // not glob zero commits and silently return an empty file set.
-        // Cleanup deletes a PREFIX of the commits, so version 0's JSON
-        // being present proves the full (0..asOf] prefix is.
-        require(commitFile(tablePath, 0L).isFile,
+        require(log.commits.headOption.contains(0L),
           s"version $asOf of $tablePath removed by log cleanup" +
-            checkpointVersions(tablePath).headOption
+            log.checkpoints.headOption
               .map(v => s" (earliest retained checkpoint: $v)").getOrElse(""))
-        shred(spark.read.schema(actionSchema)
-          .json(s"${logDir(tablePath)}/*.json")
-          .withColumn("_v",
-            regexp_extract(input_file_name(), "(\\d{20})\\.json$", 1).cast("long"))
-          .filter(col("_v") <= asOf))
-      case Some(cv) =>
-        val jsonFiles = ((cv + 1) to asOf).map(commitFile(tablePath, _))
-        jsonFiles.foreach(f =>
-          require(f.isFile, s"missing commit after checkpoint $cv: $f"))
-        val cpEvents = shred(
-          spark.read.parquet(checkpointFile(tablePath, cv).toString)
-            .withColumn("_v", lit(cv)))
-        if (jsonFiles.isEmpty) cpEvents
-        else cpEvents.unionByName(shred(
-          spark.read.schema(actionSchema)
-            .json(jsonFiles.map(_.toString): _*)
-            .withColumn("_v",
-              regexp_extract(input_file_name(), "(\\d{20})\\.json$", 1).cast("long"))))
+        (0L, commitFile(tablePath, 0L))
     }
-    events.groupBy(col("path"))
-      .agg(max(struct(col("_v").as("v"), col("_isAdd").as("a"),
-        col("size").as("s"), col("_mod").as("m"), col("_del").as("d"))).as("_m"))
-      .select(col("path"), col("_m.a").as("is_add"), col("_m.s").as("size"),
-        col("_m.m").as("mod_ts"), col("_m.d").as("del_ts"), col("_m.v").as("v"))
+
+  /** Per-path LAST action at `versionAsOf` (None = latest), sorted by
+    * path, from one listing of the log. Resolution is checkpoint-aware:
+    * with a checkpoint at cv <= asOf, the base state is the checkpoint
+    * (all its actions stamped version cv) plus the JSON commits
+    * (cv, asOf], bounded by the checkpoint interval and never by history
+    * depth; without one, the commits 0..asOf; each must be there. The
+    * fold is last-action-wins per path: the greatest (version, isAdd)
+    * survives (a single commit never both adds and removes one path —
+    * Delta's reconciliation invariant). */
+  private def lastActions(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long]): Seq[FileAction] = {
+    val log = listLog(tablePath)
+    val asOf = versionAsOf.getOrElse(log.latest)
+    require(asOf >= 0, s"no commits at or below requested version in $tablePath")
+    val (bv, bf) = base(log, tablePath, asOf)
+    val commits = (bv + 1 to asOf).map { v =>
+      val f = commitFile(tablePath, v)
+      require(log.commits.contains(v), s"missing commit after ${bf.getName}: $f")
+      (v, f)
+    }
+    ((bv, bf) +: commits)
+      .flatMap { case (v, f) => logActions(spark, f).flatMap(fileAction(v, _)) }
+      .groupBy(_.path).values.map(_.maxBy(a => (a.v, a.isAdd))).toSeq
+      .sortBy(_.path)
   }
+
+  /** Table-relative paths of the live data files at `versionAsOf`
+    * (None = latest), sorted. */
+  def liveFiles(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long] = None): Seq[String] =
+    lastActions(spark, tablePath, versionAsOf).filter(_.isAdd).map(_.path)
 
   /** The live file set at `versionAsOf` (None = latest): one row per
     * live data file with (path, size, add_version). Checkpoint-aware
     * (see [[lastActions]]); for a file whose add rode into a checkpoint,
     * `add_version` is the checkpoint version — the earliest version at
     * which the log still proves the file live (the classic checkpoint
-    * schema carries state, not per-action history). */
-  def snapshotFiles(
-      spark: SparkSession,
-      tablePath: String,
+    * schema carries state, not per-action history). The frame is a
+    * local relation of rows resolved on the driver: filtering or
+    * collecting it starts no job. */
+  def snapshotFiles(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val asOf = versionAsOf.getOrElse(latestVersion(tablePath))
-    require(asOf >= 0, s"no commits at or below requested version in $tablePath")
-    lastActions(spark, tablePath, asOf)
-      .filter(col("is_add"))
-      .select(col("path"), col("size"), col("v").as("add_version"))
+    val rows = lastActions(spark, tablePath, versionAsOf).filter(_.isAdd)
+      .map(a => Row(a.path, boxed(a.size), a.v))
+    spark.createDataFrame(rows.asJava,
+      StructType.fromDDL("path STRING, size BIGINT, add_version BIGINT"))
   }
 
   /** Compact the reconciled state at `version` into a classic
@@ -253,80 +293,47 @@ object DeltaLogStore {
     * or from the version-0 commit), every live `add` (dataChange=false,
     * per the protocol: checkpoint rows replay no data), every `remove`
     * TOMBSTONE (so VACUUM eligibility survives log cleanup). The state
-    * frame is file-count-sized and assembled distributed; only the
-    * single-file constraint coalesces it. */
-  def writeCheckpoint(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Unit = {
-    val state = lastActions(spark, tablePath, version)
-    val pmSrc = checkpointVersions(tablePath).filter(_ < version).lastOption match {
-      case Some(cv) =>
-        spark.read.parquet(checkpointFile(tablePath, cv).toString)
-          .select(col("protocol"), col("metaData"))
-      case None =>
-        spark.read.schema(pmSchema)
-          .json(commitFile(tablePath, 0L).toString)
-          .select(col("protocol"), col("metaData"))
+    * rows are resolved on the driver; one write job joins them to the
+    * copied pair and writes the single file. */
+  def writeCheckpoint(spark: SparkSession, tablePath: String, version: Long): Unit = {
+    val state = lastActions(spark, tablePath, Some(version)).map { a =>
+      if (a.isAdd) Row(Row(a.path, Map.empty[String, String], boxed(a.size),
+        boxed(a.mod), false), null)
+      else Row(null, Row(a.path, boxed(a.del), false))
     }
-    val pmRows = pmSrc
+    val pmFile = base(listLog(tablePath), tablePath, version - 1)._2.toString
+    val pmRows = (if (pmFile.endsWith(".parquet")) spark.read.schema(pmSchema).parquet(pmFile)
+      else spark.read.schema(pmSchema).json(pmFile))
       .filter(col("protocol").isNotNull || col("metaData").isNotNull)
-      .withColumn("add", expr(s"CAST(NULL AS $addDdl)"))
-      .withColumn("remove", expr(s"CAST(NULL AS $removeDdl)"))
-    val addRows = state.filter(col("is_add")).select(
-      expr(s"CAST(NULL AS $protocolDdl)").as("protocol"),
-      expr(s"CAST(NULL AS $metaDdl)").as("metaData"),
-      struct(col("path"),
-        expr("CAST(map() AS MAP<STRING,STRING>)").as("partitionValues"),
-        col("size"), col("mod_ts").as("modificationTime"),
-        lit(false).as("dataChange")).as("add"),
-      expr(s"CAST(NULL AS $removeDdl)").as("remove"))
-    val rmRows = state.filter(!col("is_add")).select(
-      expr(s"CAST(NULL AS $protocolDdl)").as("protocol"),
-      expr(s"CAST(NULL AS $metaDdl)").as("metaData"),
-      expr(s"CAST(NULL AS $addDdl)").as("add"),
-      struct(col("path"), col("del_ts").as("deletionTimestamp"),
-        lit(false).as("dataChange")).as("remove"))
-    val all = pmRows.unionByName(addRows).unionByName(rmRows)
+    // the state's rows take null protocol/metaData, the pair null add/remove
+    val all = pmRows.unionByName(spark.createDataFrame(state.asJava, stateSchema),
+      allowMissingColumns = true)
     val tmp = s"$tablePath/_tmp_cp_v$version"
     all.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".parquet")).head
     val target = checkpointFile(tablePath, version)
-    java.nio.file.Files.move(part.toPath, target.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.move(part.toPath, target.toPath, REPLACE_EXISTING)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-    val n = spark.read.parquet(target.toString).count()
+    val n = logActions(spark, target).size // read on the driver, not a count() job
     val lc = new java.io.File(logDir(tablePath), "_last_checkpoint")
     val lcTmp = new java.io.File(logDir(tablePath), "._last_checkpoint.tmp")
-    java.nio.file.Files.write(lcTmp.toPath,
-      s"""{"version":$version,"size":$n}\n"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(lcTmp.toPath, lc.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.write(lcTmp.toPath, s"""{"version":$version,"size":$n}\n""".getBytes(UTF_8))
+    Files.move(lcTmp.toPath, lc.toPath, REPLACE_EXISTING)
     ()
   }
 
   /** The schema the log DECLARES at `asOf`: `metaData.schemaString`
     * (which IS Spark's StructType JSON) from the newest checkpoint
-    * at-or-below `asOf`, else from the version-0 commit — how a reader
-    * types an EMPTY snapshot, where no parquet footer exists to infer
-    * from (ADVICE r13; real Delta always types from metaData). */
+    * at-or-below `asOf`, else from the version-0 commit, read on the
+    * driver like the rest of the log — how a reader types an EMPTY
+    * snapshot, where no parquet footer exists to infer from (ADVICE r13;
+    * real Delta always types from metaData). */
   def snapshotSchema(spark: SparkSession, tablePath: String, asOf: Long): StructType = {
-    val src = checkpointVersions(tablePath).filter(_ <= asOf).lastOption match {
-      case Some(cv) =>
-        spark.read.parquet(checkpointFile(tablePath, cv).toString)
-          .select(col("metaData.schemaString").as("s"))
-      case None =>
-        require(commitFile(tablePath, 0L).isFile,
-          s"version $asOf of $tablePath removed by log cleanup")
-        spark.read.schema(pmSchema)
-          .json(commitFile(tablePath, 0L).toString)
-          .select(col("metaData.schemaString").as("s"))
-    }
-    val js = src.filter(col("s").isNotNull).limit(1).collect()
+    val js = logActions(spark, base(listLog(tablePath), tablePath, asOf)._2).iterator
+      .flatMap(_.struct("metaData")).flatMap(_.string("schemaString")).nextOption()
     require(js.nonEmpty, s"no metaData action in $tablePath log at or below $asOf")
-    DataType.fromJson(js.head.getString(0)).asInstanceOf[StructType]
+    DataType.fromJson(js.get).asInstanceOf[StructType]
   }
 
   /** Version named by `_last_checkpoint`, or -1 if absent. */
@@ -334,8 +341,7 @@ object DeltaLogStore {
     val lc = new java.io.File(logDir(tablePath), "_last_checkpoint")
     if (!lc.isFile) -1L
     else {
-      val txt = new String(java.nio.file.Files.readAllBytes(lc.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)
+      val txt = new String(Files.readAllBytes(lc.toPath), UTF_8)
       """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
         .map(_.group(1).toLong).getOrElse(-1L)
     }
@@ -350,15 +356,10 @@ object DeltaLogStore {
     val cpv = lastCheckpointVersion(tablePath)
     if (cpv < 0) 0
     else {
-      val files = Option(new java.io.File(logDir(tablePath)).listFiles())
-        .getOrElse(Array.empty)
-      val stale = files.filter { f =>
-        val n = f.getName
-        (n.matches("\\d{20}\\.json") && n.stripSuffix(".json").toLong <= cpv) ||
-          (n.matches("\\d{20}\\.checkpoint\\.parquet") &&
-            n.stripSuffix(".checkpoint.parquet").toLong < cpv)
-      }
-      stale.foreach(f => java.nio.file.Files.delete(f.toPath))
+      val log = listLog(tablePath)
+      val stale = log.commits.filter(_ <= cpv).map(commitFile(tablePath, _)) ++
+        log.checkpoints.filter(_ < cpv).map(checkpointFile(tablePath, _))
+      stale.foreach(f => Files.delete(f.toPath))
       stale.length
     }
   }
@@ -369,18 +370,16 @@ object DeltaLogStore {
     * the tombstoned ones time travel was keeping. The latest snapshot is
     * untouched; reads of old versions whose files are gone fail, exactly
     * the Delta trade. Returns bytes reclaimed. (The sandbox listing is
-    * driver-side; at 100 TB a real VACUUM distributes the listing and
-    * joins it against the tombstone frame — the log side here,
-    * [[snapshotFiles]], is already distributed.) */
+    * driver-side; at 100 TB a real VACUUM distributes the listing of the
+    * data files and joins it against the live set.) */
   def vacuum(spark: SparkSession, tablePath: String): Long = {
-    val live = snapshotFiles(spark, tablePath, None)
-      .select("path").collect().map(_.getString(0)).toSet
+    val live = liveFiles(spark, tablePath).toSet
     Option(new java.io.File(tablePath).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
         !live.contains(f.getName))
       .map { f =>
         val n = f.length()
-        java.nio.file.Files.delete(f.toPath)
+        Files.delete(f.toPath)
         n
       }.sum
   }
@@ -394,14 +393,9 @@ object DeltaLogStore {
       spark: SparkSession,
       tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    // bounded collect: file METADATA, not rows — the same cardinality
-    // every parquet scan's driver-side file listing already carries
-    // (real Delta materializes the same live list to plan its scan)
-    val files = snapshotFiles(spark, tablePath, versionAsOf)
-      .select("path").collect().map(r => s"$tablePath/${r.getString(0)}")
+    val files = liveFiles(spark, tablePath, versionAsOf).map(p => s"$tablePath/$p")
     require(files.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
-    spark.read.schema(SnapshotStore.footerSchema(spark, files.head))
-      .parquet(files.toIndexedSeq: _*)
+    spark.read.schema(SnapshotStore.footerSchema(spark, files.head)).parquet(files: _*)
   }
 
   /** The q_delta_log fixture: a 4-commit Delta table over orders slices
@@ -425,9 +419,8 @@ object DeltaLogStore {
         def slice(r: Long) = orders.filter(pmod(col("o_orderkey"), lit(5L)) === r)
         commit(spark, path, Some(slice(0L).repartition(2)), 0L)
         commit(spark, path, Some(slice(1L).coalesce(1)), 1L)
-        val v0files = snapshotFiles(spark, path, Some(0L))
-          .select("path").collect().map(_.getString(0)).toSeq.sorted
-        commit(spark, path, Some(slice(0L).coalesce(1)), 2L, removePaths = v0files)
+        commit(spark, path, Some(slice(0L).coalesce(1)), 2L,
+          removePaths = liveFiles(spark, path, Some(0L)))
         commit(spark, path, Some(slice(2L).coalesce(1)), 3L)
         done.createNewFile()
         ()

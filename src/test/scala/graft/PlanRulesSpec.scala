@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -14,11 +13,8 @@ class PlanRulesSpec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   // the rule only rewrites relations rooted under the graft store
-  private def storeTmp(): String = {
-    val root = java.nio.file.Paths.get(SnapshotStore.root)
-    Files.createDirectories(root)
-    Files.createTempDirectory(root, "rule").toString
-  }
+  private def storeTmp(): String =
+    SparkSpec.tmpUnder(java.nio.file.Paths.get(SnapshotStore.root), "rule")
 
   test("DeriveBucketPredicate: ts-only range filter gains bucket partition pruning") {
     val path = storeTmp()

@@ -535,7 +535,7 @@ class StoreSpec extends SparkSpec {
 
   test("versioned commit log: as-of replay, delete shadowing, resurrection, scan pruning") {
     import graft.store.MergeStore
-    val path = java.nio.file.Files.createTempDirectory("graft_tt").toString + "/log"
+    val path = targetTmp("graft_tt") + "/log"
     // v0: k1→10, k2→20; v1: update k1→11, DELETE k2; v2: re-insert k2→22
     MergeStore.writeCommit(
       Seq((1L, 10L, "U"), (2L, 20L, "U")).toDF("k", "x", "_op"), path, 0)
@@ -563,7 +563,7 @@ class StoreSpec extends SparkSpec {
 
   test("checkpointAndVacuum: reads above the horizon unchanged, history below gone, idempotent") {
     import graft.store.MergeStore
-    val path = java.nio.file.Files.createTempDirectory("graft_vac").toString + "/log"
+    val path = targetTmp("graft_vac") + "/log"
     MergeStore.writeCommit(
       Seq((1L, 10L, "U"), (2L, 20L, "U"), (3L, 30L, "U")).toDF("k", "x", "_op"), path, 0)
     MergeStore.writeCommit(
@@ -736,6 +736,10 @@ class StoreSpec extends SparkSpec {
     assert(counts._1 == 1L && counts._2 == 1L, s"protocol/metaData rows: $counts")
     assert(counts._4 == 1L, s"v12's tombstone must ride the checkpoint: $counts")
     assert(cp20.count() == counts._1 + counts._2 + counts._3 + counts._4)
+    // `_last_checkpoint` names the checkpoint and its row count
+    val lc = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_delta_log", "_last_checkpoint")), "UTF-8")
+    assert(lc.trim == s"""{"version":20,"size":${cp20.count()}}""", lc)
     // EQUALITY, checkpointed vs JSON-replayed: a twin table built from
     // the same commits with no checkpoints must resolve identical
     // snapshots at every probed version (across both checkpoints, the
@@ -783,6 +787,65 @@ class StoreSpec extends SparkSpec {
       DeltaLogStore.read(spark, path, Some(9L)).collect()
     }
     ()
+  }
+
+  test("DeltaLogStore: read and snapshotFiles run no job, before and after a checkpoint") {
+    import graft.store.DeltaLogStore
+    val path = targetTmp("graft_delta_nojob") + "/tbl"
+    def row(v: Long) = Seq((v, s"r$v")).toDF("k", "s").coalesce(1)
+    def resolvesWithNoJob(v: Option[Long], want: Set[Long]): Unit = {
+      val (df, built) = census.measure(DeltaLogStore.read(spark, path, v))
+      assert(built.stages.isEmpty, s"read at $v: ${built.stages}")
+      val (files, listed) = census.measure(DeltaLogStore.snapshotFiles(spark, path, v)
+        .filter($"size" > 0L).select($"path").as[String].collect().toSet)
+      assert(listed.stages.isEmpty, s"snapshotFiles at $v: ${listed.stages}")
+      assert(files.size == want.size, s"live files at $v: $files")
+      assert(df.select($"k").as[Long].collect().toSet == want, s"rows at $v")
+    }
+    (0L to 2L).foreach(v =>
+      DeltaLogStore.commit(spark, path, Some(row(v)), v, checkpointEvery = 3))
+    assert(DeltaLogStore.checkpointVersions(path).isEmpty)
+    resolvesWithNoJob(None, Set(0L, 1L, 2L))
+    resolvesWithNoJob(Some(1L), Set(0L, 1L))
+    (3L to 4L).foreach(v =>
+      DeltaLogStore.commit(spark, path, Some(row(v)), v, checkpointEvery = 3))
+    assert(DeltaLogStore.checkpointVersions(path) == Seq(3L))
+    resolvesWithNoJob(None, (0L to 4L).toSet)
+    resolvesWithNoJob(Some(3L), (0L to 3L).toSet)
+    resolvesWithNoJob(Some(2L), Set(0L, 1L, 2L))
+    // a version past the head names the first commit it lacks
+    val e = intercept[IllegalArgumentException](DeltaLogStore.read(spark, path, Some(6L)))
+    assert(e.getMessage.contains("missing commit after") &&
+      e.getMessage.contains("0" * 19 + "5.json"), e.getMessage)
+  }
+
+  test("DeltaLogStore: a path removed at v1 and re-added at v3 is live at v3, not at v2") {
+    import graft.store.DeltaLogStore
+    def row(v: Long) = Seq((v, s"r$v")).toDF("k", "s").coalesce(1)
+    Seq(false, true).foreach { checkpointed =>
+      val path = targetTmp("graft_delta_readd") + "/tbl"
+      DeltaLogStore.commit(spark, path, Some(row(0L)), 0L)
+      val f0 = DeltaLogStore.liveFiles(spark, path)
+      assert(f0.length == 1)
+      DeltaLogStore.commit(spark, path, None, 1L, removePaths = f0)
+      DeltaLogStore.commit(spark, path, Some(row(2L)), 2L)
+      // with a checkpoint at v2 the remove rides it as a tombstone
+      if (checkpointed) DeltaLogStore.writeCheckpoint(spark, path, 2L)
+      // v3 restores v0's file by path: a commit the protocol allows but
+      // `commit` (which only adds new files) never writes, so by hand
+      val size = new java.io.File(path, f0.head).length
+      java.nio.file.Files.write(java.nio.file.Paths.get(path, "_delta_log", "0" * 19 + "3.json"),
+        (s"""{"add":{"path":"${f0.head}","partitionValues":{},"size":$size,""" +
+          """"modificationTime":1700000000003,"dataChange":true}}""" + "\n").getBytes("UTF-8"))
+      val at = s"checkpointed=$checkpointed"
+      assert(!DeltaLogStore.liveFiles(spark, path, Some(2L)).contains(f0.head), at)
+      assert(DeltaLogStore.snapshotFiles(spark, path, Some(3L)).as[(String, Long, Long)]
+        .collect().toSet.contains((f0.head, size, 3L)), at)
+      assert(DeltaLogStore.read(spark, path, Some(2L)).select($"k").as[Long]
+        .collect().toSet == Set(2L), at)
+      assert(DeltaLogStore.read(spark, path, Some(3L)).select($"k").as[Long]
+        .collect().toSet == Set(0L, 2L), at)
+    }
   }
 
   test("graftdelta source: versionAsOf reads, PushedFilters reach the parquet scan") {
