@@ -30,4 +30,18 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with `settings` on the session, then restore each key
+    * (unset if it had no value). Safe only where the work that reads the
+    * settings finishes inside `body`: a streaming query run to
+    * termination, an eager write. A lazy batch plan captures its conf
+    * when it executes, after the scope has closed. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(p)) => spark.conf.set(k, p)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

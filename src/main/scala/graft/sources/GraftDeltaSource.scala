@@ -27,8 +27,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the commit).
   *
   * Read design: the LOG layer resolves the live file set
-  * (checkpoint-aware, file-metadata-sized); the DATA plane is Spark's own
-  * V2 [[ParquetTable]] over exactly those files. That split is the whole
+  * (checkpoint-aware, file-metadata-sized) and the schema (`metaData`);
+  * the DATA plane is Spark's own V2 [[ParquetTable]] over exactly those
+  * files. That split is the whole
   * point — filter pushdown, column pruning, vectorized reading and
   * partition planning are the stock parquet scan's, untouched by the log
   * layer (the plan shows `PushedFilters` on a parquet scan, asserted in
@@ -65,10 +66,9 @@ class GraftDeltaSource extends TableProvider with DataSourceRegister {
 
   override def shortName(): String = "graftdelta"
 
-  // schema comes from the resolved snapshot's parquet footers (or the
-  // log's metaData for an empty snapshot), never from the user (a
-  // mismatching user schema would silently corrupt column pruning
-  // against the checkpointed metaData)
+  // schema comes from the resolved snapshot's log metaData, never from
+  // the user (a mismatching user schema would silently corrupt column
+  // pruning against the checkpointed metaData)
   override def supportsExternalMetadata(): Boolean = false
 
   // one resolution per (path, versionAsOf): inferSchema pins the version,
@@ -142,9 +142,13 @@ private[sources] class GraftDeltaTable(
     else graft.store.DeltaLogStore.liveFiles(spark, tablePath, Some(asOf))
       .map(p => s"$tablePath/$p")
 
+  // typed by the log's metaData, so ParquetTable runs no schema-inference
+  // job over the files' footers
+  private lazy val logSchema = graft.store.DeltaLogStore.snapshotSchema(spark, tablePath, asOf)
+
   private val parquet: Option[ParquetTable] =
     if (files.isEmpty) None
-    else Some(ParquetTable(name(), spark, options, files, None,
+    else Some(ParquetTable(name(), spark, options, files, Some(logSchema),
       classOf[ParquetFileFormat]))
 
   override def name(): String =
@@ -154,9 +158,9 @@ private[sources] class GraftDeltaTable(
     if (notYetCreated) new StructType() // first append supplies the schema
     else parquet match {
       case Some(p) => p.schema
-      // empty snapshot: the schema the log declares (metaData.schemaString
-      // IS Spark's StructType JSON) — zero rows, real schema, like Delta
-      case None => graft.store.DeltaLogStore.snapshotSchema(spark, tablePath, asOf)
+      // empty snapshot: the schema the log declares — zero rows, real
+      // schema, like Delta
+      case None => logSchema
     }
 
   // BATCH_WRITE is what DataFrameWriter.save gates the V2 write path on;

@@ -33,12 +33,15 @@ object Tables {
     *
     * NOTE the conf set below is session-global and STICKY by design
     * (ADVICE r1): the flag must still hold at execution time (the scan
-    * captures hadoop conf lazily), so a set/restore scope would break the
-    * read. Graft's own entrypoints (Verify/Bench/tests) also set it at
+    * captures hadoop conf lazily), so a set/restore scope such as
+    * `Session.withConf` would break the read; it suits an eager write.
+    * Graft's own entrypoints (Verify/Bench/tests) also set it at
     * session build; this set is a safety net for driver-owned sessions.
     * It only affects parquet files that physically carry TIMESTAMP(NANOS).
-    * Graft-written stores never do: they keep Spark's default
-    * `outputTimestampType`, INT96, which carries no min/max statistics. */
+    * Graft-written stores never do. Most keep Spark's default
+    * `outputTimestampType`, INT96, which carries no min/max statistics;
+    * `DeltaLogStore.commit` writes TIMESTAMP_MICROS, scoped to its write,
+    * for the per-file statistics its reads skip files by. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")

@@ -3,16 +3,23 @@ package graft.store
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+import java.time.{Instant, LocalDate, OffsetDateTime, ZoneOffset}
+import java.time.format.DateTimeFormatter
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BinaryComparison, Expression, Literal, Or}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.nullable
 import org.apache.spark.sql.types._
 
 /** The Delta Lake TRANSACTION-LOG wire format, read (and minimally
@@ -44,14 +51,24 @@ import org.apache.spark.sql.types._
   * append/rewrite table; a simple table written by delta-spark (reader
   * version 1) is readable here.
   *
+  * Data skipping: each `add` carries the protocol's per-file `stats`
+  * (`numRecords`, and `minValues` / `maxValues` / `nullCount` of the
+  * timestamp and date columns), taken from the new file's parquet footer
+  * at commit; [[read]]'s file index drops a file whose stats refute a
+  * filter conjunct (see [[LogFileIndex]]). A file without stats (older
+  * tables, hand-written adds) is always read.
+  *
   * Scale notes: resolution runs on the driver and starts no Spark job:
   * one listing of `_delta_log`, the checkpoint read with parquet-mr, the
   * commits after it (fewer than `checkpointEvery`; at 100 TB a table has
   * 10⁵⁺ commits, never all read) with Jackson, then a fold keeping each
-  * path's last action. It returns file metadata — the list a parquet
-  * scan's file index holds on the driver anyway. The data read is a
-  * plain parquet scan, so pushdown and column pruning are untouched by
-  * the log layer. */
+  * path's last action. [[read]] plans from that fold alone: the file
+  * statuses are the `add` actions (no data file is listed, stat'ed or
+  * opened), the schema is the log's `metaData`, and the stats prune
+  * files before any task is planned. A get over one instant of a
+  * time-ordered table reads the one file whose range holds it; the
+  * rows inside are then pushdown- and pruning-filtered by the stock
+  * parquet scan. */
 object DeltaLogStore {
 
   private def logDir(tablePath: String) = s"$tablePath/_delta_log"
@@ -85,14 +102,18 @@ object DeltaLogStore {
       case None => Nil
       case Some(d) =>
         val tmp = s"$tablePath/_tmp_v$version"
-        d.write.mode("overwrite").parquet(tmp)
+        // INT96, Spark's default timestamp encoding, carries no parquet
+        // statistics; the write runs eagerly, inside the scope
+        graft.Session.withConf(spark, "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+          d.write.mode("overwrite").parquet(tmp)
+        }
         val parts = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
         val moved = parts.zipWithIndex.map { case (p, i) =>
           val name = f"part-v$version%05d-$i%04d.snappy.parquet"
           val dst = new java.io.File(tablePath, name)
           Files.move(p.toPath, dst.toPath)
-          (name, dst.length())
+          (name, dst.length(), fileStats(spark, dst.toString))
         }
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
         moved
@@ -110,9 +131,9 @@ object DeltaLogStore {
     val removes = removePaths.map { p =>
       s"""{"remove":{"path":${jsonQuote(p)},"deletionTimestamp":$now,"dataChange":true}}"""
     }
-    val adds = added.map { case (p, sz) =>
+    val adds = added.map { case (p, sz, stats) =>
       s"""{"add":{"path":${jsonQuote(p)},"partitionValues":{},"size":$sz,""" +
-        s""""modificationTime":$now,"dataChange":true}}"""
+        s""""modificationTime":$now,"dataChange":true,"stats":${jsonQuote(stats)}}}"""
     }
     val tmpCommit = new java.io.File(logDir(tablePath), f".$version%020d.json.tmp")
     Files.write(tmpCommit.toPath,
@@ -125,6 +146,48 @@ object DeltaLogStore {
     // crashed checkpoint write never loses a commit
     if (checkpointEvery > 0 && version > 0 && version % checkpointEvery == 0)
       writeCheckpoint(spark, tablePath, version)
+  }
+
+  /** Delta's timestamp encoding in `stats`: an ISO-8601 instant, truncated
+    * to the millisecond. */
+  private val statsInstant =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(ZoneOffset.UTC)
+
+  /** The protocol's `stats` of one data file, from its parquet footer:
+    * `numRecords`, and for each top-level timestamp (µs, UTC-adjusted) or
+    * date column whose every row group carries statistics, its `minValues`,
+    * `maxValues` (omitted when every value is null) and `nullCount`. */
+  private def fileStats(spark: SparkSession, file: String): String = {
+    val footer = ParquetFiles.footer(spark, file)
+    val blocks = footer.getBlocks.asScala.toSeq
+    val node = mapper.createObjectNode()
+    node.put("numRecords", blocks.map(_.getRowCount).sum)
+    val (mins, maxs, nulls) =
+      (node.putObject("minValues"), node.putObject("maxValues"), node.putObject("nullCount"))
+    footer.getFileMetaData.getSchema.getFields.asScala.filter(_.isPrimitive).foreach { field =>
+      val name = field.getName
+      val render: Option[Long => String] = field.getLogicalTypeAnnotation match {
+        // the encoding commit writes; INT96 carries no statistics
+        case t: TimestampLogicalTypeAnnotation if t.isAdjustedToUTC && t.getUnit == TimeUnit.MICROS =>
+          Some(v => statsInstant.format(Instant.ofEpochMilli(Math.floorDiv(v, 1000L))))
+        case _: DateLogicalTypeAnnotation => Some(v => LocalDate.ofEpochDay(v).toString)
+        case _ => None
+      }
+      for (show <- render) {
+        val stats = blocks.flatMap(_.getColumns.asScala.find(_.getPath.toArray.sameElements(Seq(name))))
+          .map(_.getStatistics).filter(s => s != null && !s.isEmpty)
+        if (blocks.nonEmpty && stats.length == blocks.length) {
+          val values = stats.filter(_.hasNonNullValue)
+          def num(v: Any) = v.asInstanceOf[Number].longValue
+          if (values.nonEmpty) {
+            mins.put(name, show(values.map(s => num(s.genericGetMin)).min))
+            maxs.put(name, show(values.map(s => num(s.genericGetMax)).max))
+          }
+          if (stats.forall(_.isNumNullsSet)) nulls.put(name, stats.map(_.getNumNulls).sum)
+        }
+      }
+    }
+    mapper.writeValueAsString(node)
   }
 
   private def jsonQuote(s: String): String =
@@ -145,7 +208,7 @@ object DeltaLogStore {
       "partitionColumns: ARRAY<STRING>, configuration: MAP<STRING,STRING>, " +
       "createdTime: BIGINT>"
   private val addDdl = "STRUCT<path: STRING, partitionValues: MAP<STRING,STRING>, " +
-    "size: BIGINT, modificationTime: BIGINT, dataChange: BOOLEAN>"
+    "size: BIGINT, modificationTime: BIGINT, dataChange: BOOLEAN, stats: STRING>"
   private val removeDdl =
     "STRUCT<path: STRING, deletionTimestamp: BIGINT, dataChange: BOOLEAN>"
   private val pmSchema = StructType.fromDDL(s"protocol $protocolDdl, metaData $metaDdl")
@@ -200,13 +263,9 @@ object DeltaLogStore {
   /** The actions of one log file, read on the driver: the rows of a
     * checkpoint (parquet-mr) or the lines of a JSON commit (Jackson). */
   private def logActions(spark: SparkSession, file: java.io.File): Seq[Fields] =
-    if (file.getName.endsWith(".parquet")) {
-      val reader = ParquetReader.builder(new GroupReadSupport(), new Path(file.toString))
-        .withConf(spark.sparkContext.hadoopConfiguration).build()
-      try Iterator.continually(reader.read()).takeWhile(_ != null)
-        .map(new RowFields(_)).toList
-      finally reader.close()
-    } else
+    if (file.getName.endsWith(".parquet"))
+      ParquetFiles.rows(spark, file.toString).map(new RowFields(_))
+    else
       Files.readAllLines(file.toPath, UTF_8).asScala.toList
         .filter(_.trim.nonEmpty).map(l => new JsonFields(mapper.readTree(l)))
 
@@ -214,13 +273,14 @@ object DeltaLogStore {
     * carries it, add or remove, and the fields a checkpoint keeps. */
   private final case class FileAction(
       v: Long, path: String, isAdd: Boolean,
-      size: Option[Long], mod: Option[Long], del: Option[Long])
+      size: Option[Long], mod: Option[Long], del: Option[Long], stats: Option[String])
 
   private def fileAction(v: Long, a: Fields): Option[FileAction] =
     a.struct("add").flatMap(f => f.string("path").map(p =>
-      FileAction(v, p, isAdd = true, f.long("size"), f.long("modificationTime"), None)))
+      FileAction(v, p, isAdd = true, f.long("size"), f.long("modificationTime"), None,
+        f.string("stats"))))
       .orElse(a.struct("remove").flatMap(f => f.string("path").map(p =>
-        FileAction(v, p, isAdd = false, None, None, f.long("deletionTimestamp")))))
+        FileAction(v, p, isAdd = false, None, None, f.long("deletionTimestamp"), None))))
 
   private def boxed(o: Option[Long]): java.lang.Long = o.map(Long.box).orNull
 
@@ -239,8 +299,14 @@ object DeltaLogStore {
         (0L, commitFile(tablePath, 0L))
     }
 
-  /** Per-path LAST action at `versionAsOf` (None = latest), sorted by
-    * path, from one listing of the log. Resolution is checkpoint-aware:
+  /** A snapshot as the log resolves it: each path's last action, sorted by
+    * path, and the newest `metaData.schemaString` at or below the version. */
+  private final case class Snapshot(actions: Seq[FileAction], schemaString: Option[String]) {
+    def adds: Seq[FileAction] = actions.filter(_.isAdd)
+  }
+
+  /** The snapshot at `versionAsOf` (None = latest), from one listing of
+    * the log and one read of each log file. Resolution is checkpoint-aware:
     * with a checkpoint at cv <= asOf, the base state is the checkpoint
     * (all its actions stamped version cv) plus the JSON commits
     * (cv, asOf], bounded by the checkpoint interval and never by history
@@ -248,8 +314,8 @@ object DeltaLogStore {
     * fold is last-action-wins per path: the greatest (version, isAdd)
     * survives (a single commit never both adds and removes one path —
     * Delta's reconciliation invariant). */
-  private def lastActions(spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long]): Seq[FileAction] = {
+  private def snapshot(spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long]): Snapshot = {
     val log = listLog(tablePath)
     val asOf = versionAsOf.getOrElse(log.latest)
     require(asOf >= 0, s"no commits at or below requested version in $tablePath")
@@ -259,21 +325,24 @@ object DeltaLogStore {
       require(log.commits.contains(v), s"missing commit after ${bf.getName}: $f")
       (v, f)
     }
-    ((bv, bf) +: commits)
-      .flatMap { case (v, f) => logActions(spark, f).flatMap(fileAction(v, _)) }
+    val logs = ((bv, bf) +: commits).map { case (v, f) => (v, logActions(spark, f)) }
+    val actions = logs.flatMap { case (v, as) => as.flatMap(fileAction(v, _)) }
       .groupBy(_.path).values.map(_.maxBy(a => (a.v, a.isAdd))).toSeq
       .sortBy(_.path)
+    val schemaString = logs.reverseIterator.flatMap(_._2.reverseIterator)
+      .flatMap(_.struct("metaData")).flatMap(_.string("schemaString")).nextOption()
+    Snapshot(actions, schemaString)
   }
 
   /** Table-relative paths of the live data files at `versionAsOf`
     * (None = latest), sorted. */
   def liveFiles(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): Seq[String] =
-    lastActions(spark, tablePath, versionAsOf).filter(_.isAdd).map(_.path)
+    snapshot(spark, tablePath, versionAsOf).adds.map(_.path)
 
   /** The live file set at `versionAsOf` (None = latest): one row per
     * live data file with (path, size, add_version). Checkpoint-aware
-    * (see [[lastActions]]); for a file whose add rode into a checkpoint,
+    * (see [[snapshot]]); for a file whose add rode into a checkpoint,
     * `add_version` is the checkpoint version — the earliest version at
     * which the log still proves the file live (the classic checkpoint
     * schema carries state, not per-action history). The frame is a
@@ -281,7 +350,7 @@ object DeltaLogStore {
     * collecting it starts no job. */
   def snapshotFiles(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val rows = lastActions(spark, tablePath, versionAsOf).filter(_.isAdd)
+    val rows = snapshot(spark, tablePath, versionAsOf).adds
       .map(a => Row(a.path, boxed(a.size), a.v))
     spark.createDataFrame(rows.asJava,
       StructType.fromDDL("path STRING, size BIGINT, add_version BIGINT"))
@@ -291,14 +360,15 @@ object DeltaLogStore {
     * single-file checkpoint + `_last_checkpoint`. Rows: the `protocol` +
     * `metaData` pair (copied forward from the newest prior checkpoint,
     * or from the version-0 commit), every live `add` (dataChange=false,
-    * per the protocol: checkpoint rows replay no data), every `remove`
+    * per the protocol: checkpoint rows replay no data; `stats` kept as
+    * the classic checkpoint's `add.stats` string), every `remove`
     * TOMBSTONE (so VACUUM eligibility survives log cleanup). The state
     * rows are resolved on the driver; one write job joins them to the
     * copied pair and writes the single file. */
   def writeCheckpoint(spark: SparkSession, tablePath: String, version: Long): Unit = {
-    val state = lastActions(spark, tablePath, Some(version)).map { a =>
+    val state = snapshot(spark, tablePath, Some(version)).actions.map { a =>
       if (a.isAdd) Row(Row(a.path, Map.empty[String, String], boxed(a.size),
-        boxed(a.mod), false), null)
+        boxed(a.mod), false, a.stats.orNull), null)
       else Row(null, Row(a.path, boxed(a.del), false))
     }
     val pmFile = base(listLog(tablePath), tablePath, version - 1)._2.toString
@@ -323,17 +393,19 @@ object DeltaLogStore {
     ()
   }
 
-  /** The schema the log DECLARES at `asOf`: `metaData.schemaString`
-    * (which IS Spark's StructType JSON) from the newest checkpoint
-    * at-or-below `asOf`, else from the version-0 commit, read on the
-    * driver like the rest of the log — how a reader types an EMPTY
-    * snapshot, where no parquet footer exists to infer from (ADVICE r13;
-    * real Delta always types from metaData). */
-  def snapshotSchema(spark: SparkSession, tablePath: String, asOf: Long): StructType = {
-    val js = logActions(spark, base(listLog(tablePath), tablePath, asOf)._2).iterator
-      .flatMap(_.struct("metaData")).flatMap(_.string("schemaString")).nextOption()
-    require(js.nonEmpty, s"no metaData action in $tablePath log at or below $asOf")
-    DataType.fromJson(js.get).asInstanceOf[StructType]
+  /** The schema the log DECLARES at `asOf`: the newest
+    * `metaData.schemaString` (which IS Spark's StructType JSON) at or
+    * below `asOf`, resolved on the driver like the rest of the log, with
+    * every field nullable, as Spark reads parquet. Real Delta always types
+    * from metaData; so do [[read]] and the graftdelta source, and an
+    * EMPTY snapshot, with no parquet footer to infer from, types the same
+    * way (ADVICE r13). */
+  def snapshotSchema(spark: SparkSession, tablePath: String, asOf: Long): StructType =
+    schemaOf(snapshot(spark, tablePath, Some(asOf)), tablePath)
+
+  private def schemaOf(snap: Snapshot, tablePath: String): StructType = {
+    require(snap.schemaString.nonEmpty, s"no metaData action in $tablePath log")
+    nullable(DataType.fromJson(snap.schemaString.get).asInstanceOf[StructType])
   }
 
   /** Version named by `_last_checkpoint`, or -1 if absent. */
@@ -385,18 +457,106 @@ object DeltaLogStore {
   }
 
   /** Read the table snapshot `VERSION AS OF versionAsOf` (None = latest):
-    * resolve the live file set from the log, then a plain parquet scan
-    * over exactly those files — pushdown and pruning intact. The schema
-    * is the first live file's footer, the one file Spark's own inference
-    * would read with `mergeSchema` off. */
+    * a parquet scan planned from the log alone — its files are the live
+    * `add`s, skipped by their stats ([[LogFileIndex]]), its schema the
+    * log's `metaData` — with pushdown and column pruning intact. */
   def read(
       spark: SparkSession,
       tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
-    val files = liveFiles(spark, tablePath, versionAsOf).map(p => s"$tablePath/$p")
-    require(files.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
-    spark.read.schema(SnapshotStore.footerSchema(spark, files.head)).parquet(files: _*)
+    val snap = snapshot(spark, tablePath, versionAsOf)
+    require(snap.adds.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
+    val schema = schemaOf(snap, tablePath)
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new LogFileIndex(tablePath, snap.adds, schema), new StructType(), schema,
+      None, new ParquetFileFormat(), Map.empty)(spark))
   }
+
+  /** One snapshot's live files as a Spark file index. Their statuses are
+    * the `add` actions' path, size and modificationTime, so nothing is
+    * listed or stat'ed. [[listFiles]] drops a file only when its `stats`
+    * refute a data filter: a conjunct, under AND / OR, comparing an
+    * indexed (timestamp or date) column to a literal with `=`, `<`, `<=`,
+    * `>` or `>=`. Any other predicate, and any file without stats, is
+    * read. */
+  private final class LogFileIndex(tablePath: String, adds: Seq[FileAction],
+      dataSchema: StructType) extends FileIndex {
+
+    private val root = new Path(new java.io.File(tablePath).getAbsoluteFile.toURI)
+
+    private def status(a: FileAction) = new FileStatus(
+      a.size.getOrElse(throw new IllegalStateException(s"add of ${a.path} carries no size")),
+      false, 0, 1, a.mod.getOrElse(0L), new Path(root, a.path))
+
+    /** Per file, the [min, max] of each indexed column in the units of
+      * Spark's literals: µs for a timestamp, its max widened to the last
+      * µs of the millisecond the encoding truncated it to; days for a date. */
+    private lazy val ranges: Map[String, Map[String, (Long, Long)]] = {
+      val parsers: Map[String, (String, Boolean) => Long] = dataSchema.fields.collect {
+        case f if f.dataType == TimestampType => f.name -> { (s: String, isMax: Boolean) =>
+          val us = Math.multiplyExact(OffsetDateTime.parse(s).toInstant.toEpochMilli, 1000L)
+          if (isMax) us + 999L else us
+        }
+        case f if f.dataType == DateType =>
+          f.name -> ((s: String, _: Boolean) => LocalDate.parse(s).toEpochDay)
+      }.toMap
+      adds.map { a =>
+        val parsed = a.stats.flatMap(s => Try(mapper.readTree(s)).toOption)
+        a.path -> parsed.toSeq.flatMap { j =>
+          parsers.flatMap { case (col, parse) =>
+            Try((parse(j.get("minValues").get(col).asText, false),
+              parse(j.get("maxValues").get(col).asText, true))).toOption.map(col -> _)
+          }
+        }.toMap
+      }.toMap
+    }
+
+    /** Whether `e` is false (or null) on every row of a file whose indexed
+      * columns span `r`. */
+    private def refutes(r: Map[String, (Long, Long)], e: Expression): Boolean = e match {
+      case And(a, b) => refutes(r, a) || refutes(r, b)
+      case Or(a, b) => refutes(r, a) && refutes(r, b)
+      case c: BinaryComparison =>
+        val bound = (c.left, c.right) match {
+          case (a: AttributeReference, l: Literal) => Some((a, c.symbol, l))
+          case (l: Literal, a: AttributeReference) => Some((a, flipped.getOrElse(c.symbol, c.symbol), l))
+          case _ => None
+        }
+        bound.exists { case (a, op, l) =>
+          (r.get(a.name), l.value) match {
+            case (Some((lo, hi)), v: Number) if l.dataType == a.dataType =>
+              val x = v.longValue
+              op match {
+                case "=" => x < lo || x > hi
+                case "<" => lo >= x
+                case "<=" => lo > x
+                case ">" => hi <= x
+                case ">=" => hi < x
+                case _ => false
+              }
+            case _ => false
+          }
+        }
+      case _ => false
+    }
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val kept =
+        if (dataFilters.isEmpty) adds
+        else adds.filterNot(a => dataFilters.exists(refutes(ranges(a.path), _)))
+      Seq(PartitionDirectory(InternalRow.empty, kept.map(status).toArray))
+    }
+
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def inputFiles: Array[String] = adds.map(status(_).getPath.toString).toArray
+    override def refresh(): Unit = () // a snapshot never changes
+    override def sizeInBytes: Long = adds.flatMap(_.size).sum
+    override def partitionSchema: StructType = new StructType()
+  }
+
+  /** `lit op col` as `col flipped(op) lit`. */
+  private val flipped = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
 
   /** The q_delta_log fixture: a 4-commit Delta table over orders slices
     * exercising append, OPTIMIZE-style rewrite (remove + re-add as one

@@ -5,9 +5,6 @@ import java.nio.file.{Files, Paths}
 import java.time.{Instant, ZoneId}
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -83,11 +80,8 @@ object SnapshotStore {
     * every Spark writer stores. It is the footer and the entry Spark's
     * schema-inference job reads when `mergeSchema` is off. */
   def footerSchema(spark: SparkSession, file: String): StructType = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(file), spark.sparkContext.hadoopConfiguration))
-    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+    val json = ParquetFiles.footer(spark, file).getFileMetaData.getKeyValueMetaData
       .get("org.apache.spark.sql.parquet.row.metadata")
-    finally reader.close()
     require(json != null, s"$file carries no Spark row schema in its footer")
     DataType.fromJson(json).asInstanceOf[StructType]
   }

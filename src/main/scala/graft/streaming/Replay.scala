@@ -7,6 +7,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.Session.withConf
 import graft.plans.Spread._
 import graft.sources.Tables
 import graft.store.SnapshotStore
@@ -18,7 +19,7 @@ import graft.store.SnapshotStore
   * semantic of the reference's batch loop, on the streaming engine.
   *
   * Each streaming protocol is stated once: the replay source
-  * ([[replaySource]]), the scoped session settings ([[withConf]]), one
+  * ([[replaySource]]), the scoped session settings (`Session.withConf`), one
   * runner per sink ([[appendReplayToFiles]], [[replayToMemory]],
   * [[totalsToFiles]]), the versioned-view fold ([[foldView]]) and the
   * mtime-ordered ingest store ([[ensureOrderedFiles]]).
@@ -43,19 +44,6 @@ object Replay {
     * store). */
   private val RocksDB = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Run `body` with `settings` on the session, then restore each key
-    * (unset if it had no value). Scoped set/restore is safe here because
-    * the streaming queries run to completion inside `body`
-    * (awaitTermination), unlike lazily-executed batch plans. */
-  private def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
-    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
-    settings.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(p)) => spark.conf.set(k, p)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   /** The one replay source reader: a parquet file stream typed by the
     * schema of the store at `schemaPath` (read once here, so one reader
@@ -1322,7 +1310,7 @@ object Replay {
   /** Replay the events store through [[RunningTotalsProcessor]].
     * transformWithState requires the RocksDB state store provider (the
     * v2 API's backing store) — set for this query and restored after
-    * ([[withConf]]). Totals strictly increase across a key's updates, so
+    * (`Session.withConf`). Totals strictly increase across a key's updates, so
     * max-reducing the Update-mode sink is robust to backlog splits. */
   def runningTotalsReplay(
       spark: SparkSession,

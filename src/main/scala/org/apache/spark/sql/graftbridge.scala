@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ↔ Expression bridge for graft's native Catalyst expressions.
   * `ExpressionUtils` is private[sql], so this one-file shim lives in the
@@ -10,6 +11,10 @@ import org.apache.spark.sql.classic.ExpressionUtils
 package object graftbridge {
   def columnOf(e: Expression): Column = ExpressionUtils.column(e)
   def expressionOf(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `s` with every field nullable, nested ones too: the schema Spark
+    * gives a parquet read (`StructType.asNullable` is private[spark]). */
+  def nullable(s: StructType): StructType = s.asNullable
 
   /** Unload every cached streaming state-store provider on this JVM
     * (closes RocksDB natives, drops the HDFS-backed in-memory maps, and

@@ -65,6 +65,15 @@ class SessionSpec extends SparkSpec {
       Set("Bench", "Verify", "Profile", "PlanDump", "Scratch").map(n => s"scala/graft/$n.scala"))
   }
 
+  test("only ParquetFiles opens a parquet reader on the driver") {
+    val main = sources(Paths.get("src", "main"))
+    // a reader not handed the session's Hadoop conf builds its own
+    val readers = Seq("ParquetFileReader" + ".open(", "ParquetReader" + ".builder(",
+      "ParquetReader" + ".Builder")
+    assert(readers.flatMap(occurrences(main, _).keySet).toSet ==
+      Set("scala/graft/store/ParquetFiles.scala"))
+  }
+
   test("one versioned-view fold and one RocksDB provider setting under src/main") {
     val main = sources(Paths.get("src", "main"))
     // latestView's definition and the two reads of Replay.foldView: a

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.store.{CompressedStore, MergeStore, SnapshotStore}
@@ -821,7 +823,8 @@ class StoreSpec extends SparkSpec {
 
   test("DeltaLogStore: a path removed at v1 and re-added at v3 is live at v3, not at v2") {
     import graft.store.DeltaLogStore
-    def row(v: Long) = Seq((v, s"r$v")).toDF("k", "s").coalesce(1)
+    def row(v: Long) = Seq((v, s"r$v", T0 + v * Hour)).toDF("k", "s", "us")
+      .select($"k", $"s", timestamp_micros($"us").as("ts")).coalesce(1)
     Seq(false, true).foreach { checkpointed =>
       val path = targetTmp("graft_delta_readd") + "/tbl"
       DeltaLogStore.commit(spark, path, Some(row(0L)), 0L)
@@ -845,7 +848,120 @@ class StoreSpec extends SparkSpec {
         .collect().toSet == Set(2L), at)
       assert(DeltaLogStore.read(spark, path, Some(3L)).select($"k").as[Long]
         .collect().toSet == Set(0L, 2L), at)
+      // the hand-written add has no stats, so no predicate skips it; v2's
+      // file (ts = T0 + 2 h) is skipped by its own
+      val at3 = DeltaLogStore.read(spark, path, Some(3L))
+      val before = at3.filter($"ts" < micros(T0 - Hour))
+      assert(scannedFiles(before) == 1 && before.isEmpty, at)
+      val v0 = at3.filter($"ts" === micros(T0))
+      assert(scannedFiles(v0) == 1 && v0.select($"k").as[Long].collect().toSeq == Seq(0L), at)
     }
+  }
+
+  /** 2024-01-01 00:00 UTC and one hour, in µs. */
+  private val T0 = 1704067200000000L
+  private val Hour = 3600L * 1000000L
+
+  /** A timestamp literal of `us` µs since the epoch. */
+  private def micros(us: Long): Column =
+    lit(java.time.Instant.ofEpochSecond(Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+
+  /** Runs `df` and returns the files its parquet scans read. */
+  private def scannedFiles(df: DataFrame): Long = {
+    df.collect()
+    df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      .map(_.metrics("numFiles").value).sum
+  }
+
+  test("DeltaLogStore: stats skip exactly the files a timestamp or date predicate cannot meet") {
+    import graft.store.DeltaLogStore
+    val path = targetTmp("graft_delta_skip") + "/tbl"
+    // file i holds two rows, at 12i h + 15 min and 12i h + 45 min: whole
+    // milliseconds, so its stats' [min, max] are its rows' exact range
+    val spans = (0 until 4).map(i => (T0 + 12 * i * Hour + Hour / 4, T0 + 12 * i * Hour + 3 * Hour / 4))
+    spans.zipWithIndex.foreach { case ((lo, hi), i) =>
+      val rows = Seq((2L * i, lo), (2L * i + 1, hi)).toDF("k", "us")
+        .select($"k", timestamp_micros($"us").as("ts")).withColumn("d", to_date($"ts"))
+      DeltaLogStore.commit(spark, path, Some(rows.coalesce(1)), i.toLong)
+    }
+    // the protocol's encoding: ISO instants truncated to ms, ISO dates
+    val commit0 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_delta_log", "0" * 20 + ".json")), "UTF-8")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val add = commit0.split("\n").map(mapper.readTree).find(_.has("add")).get.get("add")
+    assert(mapper.readTree(add.get("stats").asText) == mapper.readTree(
+      """{"numRecords":2,"minValues":{"ts":"2024-01-01T00:15:00.000Z","d":"2024-01-01"},""" +
+        """"maxValues":{"ts":"2024-01-01T00:45:00.000Z","d":"2024-01-01"},""" +
+        """"nullCount":{"ts":0,"d":0}}"""), add.toString)
+    val (lo1, hi1) = spans(1)
+    val lo3 = spans(3)._1
+    // each predicate with the files it may skip none of: those whose
+    // [min, max] meets it, the max widened to the last µs of its
+    // millisecond (the stats truncate it), so `> max` still reads the file
+    val grid: Seq[(String, Column, ((Long, Long)) => Boolean)] = Seq(
+      ("= a file's min", $"ts" === micros(lo1), { case (lo, hi) => lo <= lo1 && lo1 <= hi }),
+      ("= inside a file, no row", $"ts" === micros(lo1 + 60000000L),
+        { case (lo, hi) => lo <= lo1 + 60000000L && lo1 + 60000000L <= hi }),
+      ("< a file's min", $"ts" < micros(lo1), { case (lo, _) => lo < lo1 }),
+      ("<= a file's min", $"ts" <= micros(lo1), { case (lo, _) => lo <= lo1 }),
+      ("> a file's max", $"ts" > micros(hi1), { case (_, hi) => hi > hi1 }),
+      (">= a file's max", $"ts" >= micros(hi1), { case (_, hi) => hi >= hi1 }),
+      (">= 1 ms past a file's max", $"ts" >= micros(hi1 + 1000L), { case (_, hi) => hi >= hi1 + 1000L }),
+      ("literal on the left", micros(hi1) < $"ts", { case (_, hi) => hi > hi1 }),
+      ("a range", $"ts" >= micros(lo1) && $"ts" < micros(hi1),
+        { case (lo, hi) => hi >= lo1 && lo < hi1 }),
+      ("OR of two ranges", $"ts" < micros(lo1) || $"ts" >= micros(lo3),
+        { case (lo, hi) => lo < lo1 || hi >= lo3 }),
+      ("a date", $"d" === lit(java.sql.Date.valueOf("2024-01-02")),
+        { case (lo, _) => lo >= T0 + 24 * Hour }),
+      ("not a column against a literal", hour($"ts") === 12, _ => true))
+    def check(at: String): Unit = {
+      val live = DeltaLogStore.liveFiles(spark, path).map(p => s"$path/$p")
+      grid.foreach { case (name, p, meets) =>
+        val pruned = DeltaLogStore.read(spark, path).filter(p)
+        assert(scannedFiles(pruned) == spans.count { case (lo, hi) => meets((lo, hi + 999L)) },
+          s"$at: $name")
+        assert(pruned.collect().toSet == spark.read.parquet(live: _*).filter(p).collect().toSet,
+          s"$at: $name")
+      }
+    }
+    check("JSON commits")
+    DeltaLogStore.writeCheckpoint(spark, path, 3L)
+    check("checkpoint")
+    assert(DeltaLogStore.cleanupLog(path) == 4)
+    check("after cleanupLog")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try check("session zone Asia/Kolkata")
+    finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
+
+  test("DeltaLogStore: a file whose only ts has non-zero µs is kept") {
+    import graft.store.DeltaLogStore
+    val path = targetTmp("graft_delta_us") + "/tbl"
+    val us = T0 + 500L // stats say 2024-01-01T00:00:00.000Z
+    DeltaLogStore.commit(spark, path,
+      Some(spark.range(1).select(timestamp_micros(lit(us)).as("ts")).coalesce(1)), 0L)
+    Seq($"ts" === micros(us), $"ts" >= micros(us), $"ts" > micros(T0)).foreach { p =>
+      val df = DeltaLogStore.read(spark, path).filter(p)
+      assert(scannedFiles(df) == 1 && df.count() == 1, p.toString)
+    }
+  }
+
+  test("DeltaLogStore: read over 40 live files plans with no job, typed as Spark reads it") {
+    import graft.store.DeltaLogStore
+    val path = targetTmp("graft_delta_40") + "/tbl"
+    (0L until 40L).foreach { v =>
+      val row = Seq((v, T0 + v * Hour)).toDF("k", "us").select($"k", timestamp_micros($"us").as("ts"))
+      DeltaLogStore.commit(spark, path, Some(row.coalesce(1)), v, checkpointEvery = 10)
+    }
+    val (get, built) = census.measure {
+      val df = DeltaLogStore.read(spark, path).filter($"ts" === micros(T0 + 7 * Hour))
+      df.queryExecution.executedPlan
+      df
+    }
+    assert(built.stages.isEmpty, built.stages)
+    assert(scannedFiles(get) == 1 && get.select($"k").as[Long].collect().toSeq == Seq(7L))
+    assert(DeltaLogStore.read(spark, path).schema == spark.read.parquet(path).schema)
   }
 
   test("graftdelta source: versionAsOf reads, PushedFilters reach the parquet scan") {
@@ -855,6 +971,10 @@ class StoreSpec extends SparkSpec {
     val d1 = Seq((3L, "c")).toDF("k", "s")
     DeltaLogStore.commit(spark, path, Some(d0.coalesce(1)), 0L)
     DeltaLogStore.commit(spark, path, Some(d1.coalesce(1)), 1L)
+    // the log types the table, so building it runs no inference job
+    val (loaded, built) = census.measure(spark.read.format("graftdelta").load(path))
+    assert(built.stages.isEmpty, built.stages)
+    assert(loaded.schema == spark.read.parquet(path).schema)
     // latest + time travel through the public reader API
     assert(spark.read.format("graftdelta").load(path)
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b"), (3L, "c")))
