@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,15 +13,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * predicates and conjoin them, so partition pruning fires for queries
   * that only name `ts`.
   *
-  * Scoped to the store's own relations — matching by column names alone
-  * would rewrite any table that happens to have `bucket`/`ts` columns.
+  * Scoped to the store's own relations ([[GraftRules.isGraftStore]]) —
+  * matching by column names alone would rewrite any table that happens
+  * to have `bucket`/`ts` columns.
   * Bucket strings are rendered in the session timezone, matching what
   * SnapshotStore.bucketExpr (date_trunc/date_format) wrote.
   *
   * The rewrite is semantics-preserving (bucket(ts) bounds are a superset
   * of the ts bounds) and idempotent (skipped when any conjunct already
   * references `bucket`). Installed via
-  * `spark.experimental.extraOptimizations` (SnapshotStore.installRules) —
+  * `spark.experimental.extraOptimizations` ([[GraftRules.install]]) —
   * after the main optimizer batches, still before physical planning where
   * partition filters are split from data filters.
   */
@@ -37,15 +36,8 @@ object DeriveBucketPredicate extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  /** Only graft's own store relations (root path check). */
-  private def isGraftStore(plan: LogicalPlan): Boolean = plan match {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.location.rootPaths.forall(_.toString.contains("/graftstore/"))
-    case _ => false
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case f @ Filter(cond, child) if isGraftStore(child) =>
+    case f @ Filter(cond, child) if GraftRules.isGraftStore(child) =>
       child.output.find(a => a.name == "bucket" && a.dataType == StringType) match {
         case Some(bucket) =>
           val zone = conf.sessionLocalTimeZone
@@ -72,14 +64,5 @@ object DeriveBucketPredicate extends Rule[LogicalPlan] with PredicateHelper {
           }
         case None => f
       }
-  }
-}
-
-object GraftRules {
-  /** Idempotently register graft's optimizer rules on a session. */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(DeriveBucketPredicate))
-      spark.experimental.extraOptimizations = cur :+ DeriveBucketPredicate
   }
 }

@@ -77,7 +77,8 @@ object DeltaLogStore {
     new java.io.File(logDir(tablePath), f"$version%020d.json")
 
   /** Append one commit: write `df` as parquet part files under the table
-    * root (named part-v{version}-{i}), then the JSON commit with one
+    * root (named part-v{version}-{i}; a 0-row part is dropped unless every
+    * part is empty, when one is kept), then the JSON commit with one
     * `add` action per file — version 0 also carries the `protocol` and
     * `metaData` actions (schemaString = Spark's StructType JSON, which
     * IS Delta's schema encoding). `removePaths` lists table-relative
@@ -109,11 +110,16 @@ object DeltaLogStore {
         }
         val parts = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-        val moved = parts.zipWithIndex.map { case (p, i) =>
+          .map(p => (p, fileStats(spark, p.toString)))
+        // an empty partition of `d` writes a 0-row file: it has no min/max,
+        // so every read would open it. One file stays when all are empty.
+        val nonEmpty = parts.filter { case (_, (rows, _)) => rows > 0 }
+        val kept = if (nonEmpty.isEmpty) parts.take(1) else nonEmpty
+        val moved = kept.zipWithIndex.map { case ((p, (_, stats)), i) =>
           val name = f"part-v$version%05d-$i%04d.snappy.parquet"
           val dst = new java.io.File(tablePath, name)
           Files.move(p.toPath, dst.toPath)
-          (name, dst.length(), fileStats(spark, dst.toString))
+          (name, dst.length(), stats)
         }
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
         moved
@@ -153,15 +159,17 @@ object DeltaLogStore {
   private val statsInstant =
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(ZoneOffset.UTC)
 
-  /** The protocol's `stats` of one data file, from its parquet footer:
-    * `numRecords`, and for each top-level timestamp (µs, UTC-adjusted) or
-    * date column whose every row group carries statistics, its `minValues`,
-    * `maxValues` (omitted when every value is null) and `nullCount`. */
-  private def fileStats(spark: SparkSession, file: String): String = {
+  /** The row count and the protocol's `stats` of one data file, from its
+    * parquet footer: `numRecords`, and for each top-level timestamp (µs,
+    * UTC-adjusted) or date column whose every row group carries statistics,
+    * its `minValues`, `maxValues` (omitted when every value is null) and
+    * `nullCount`. */
+  private def fileStats(spark: SparkSession, file: String): (Long, String) = {
     val footer = ParquetFiles.footer(spark, file)
     val blocks = footer.getBlocks.asScala.toSeq
     val node = mapper.createObjectNode()
-    node.put("numRecords", blocks.map(_.getRowCount).sum)
+    val rows = blocks.map(_.getRowCount).sum
+    node.put("numRecords", rows)
     val (mins, maxs, nulls) =
       (node.putObject("minValues"), node.putObject("maxValues"), node.putObject("nullCount"))
     footer.getFileMetaData.getSchema.getFields.asScala.filter(_.isPrimitive).foreach { field =>
@@ -187,7 +195,7 @@ object DeltaLogStore {
         }
       }
     }
-    mapper.writeValueAsString(node)
+    (rows, mapper.writeValueAsString(node))
   }
 
   private def jsonQuote(s: String): String =
@@ -459,11 +467,16 @@ object DeltaLogStore {
   /** Read the table snapshot `VERSION AS OF versionAsOf` (None = latest):
     * a parquet scan planned from the log alone — its files are the live
     * `add`s, skipped by their stats ([[LogFileIndex]]), its schema the
-    * log's `metaData` — with pushdown and column pruning intact. */
+    * log's `metaData` — with pushdown and column pruning intact. It
+    * installs [[graft.plans.GraftRules]] as the hour store's reads do, so
+    * a table kept under a `graftstore` directory has the timestamp bounds
+    * of its post-scan filter read by reference: a filter at a new instant
+    * reuses the class compiled for the last one. */
   def read(
       spark: SparkSession,
       tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
+    graft.plans.GraftRules.install(spark)
     val snap = snapshot(spark, tablePath, versionAsOf)
     require(snap.adds.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
     val schema = schemaOf(snap, tablePath)

@@ -35,6 +35,12 @@ import graft.sources.Tables
   * directory. Those directories alone are read (`basePath` = the store
   * root, so `bucket` stays a partition column). Nothing is cached: every
   * call lists afresh and sees the last append.
+  *
+  * Every read installs [[graft.plans.GraftRules]] on its session: the
+  * optimizer derives `bucket` bounds from a ts-only filter
+  * (`DeriveBucketPredicate`), and the planner hands the post-scan filter
+  * its timestamp bounds by reference (`BindTimestampBounds`), so a get or
+  * traj at a new instant reuses the generated class of the last one.
   */
 object SnapshotStore {
 

@@ -2,10 +2,14 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Pairing
-import graft.store.SnapshotStore
+import graft.plans.BindTimestampBounds
+import graft.store.{DeltaLogStore, SnapshotStore}
 
 class PlanRulesSpec extends SparkSpec {
   import spark.implicits._
@@ -90,6 +94,87 @@ class PlanRulesSpec extends SparkSpec {
     val q = SnapshotStore.lookupBucket(spark, path, "2024-01-01-10")
       .filter($"ts" >= lit("2024-01-01 00:00:00").cast("timestamp"))
     assert(q.count() == 1) // no conflict / double-derivation
+  }
+
+  /** Classes compiled so far in this JVM. */
+  private def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `body` planned without BindTimestampBounds. A store read reinstalls
+    * it, so `body` must only plan or run frames built before. */
+  private def withoutBinding[T](body: => T): T = {
+    val saved = spark.experimental.extraStrategies
+    try {
+      spark.experimental.extraStrategies = saved.filterNot(_ == BindTimestampBounds)
+      body
+    } finally spark.experimental.extraStrategies = saved
+  }
+
+  private def micros(us: Long): Column = timestamp_micros(lit(us))
+
+  /** Rows at 10:15 and 11:15 (plus 321 µs, an instant no other test reads)
+    * on 2024-01-01 UTC, in µs. */
+  private val (at10, at11) = (1704104100000321L, 1704107700000321L)
+  private def twoHours = Seq((1L, at10, 1.0), (2L, at11, 2.0)).toDF("id", "us", "v")
+    .select($"id", timestamp_micros($"us").as("ts"), $"v")
+
+  /** Runs a get-shaped query at `us` (A), then at `us + 1 h` (B, a bound
+    * never planned before): B compiles no class and returns what the same
+    * query returns planned without the strategy, whose run at a third new
+    * bound does compile. Returns B's frame, run. */
+  private def checkNoCompileAtNewBound(get: Long => DataFrame, us: Long): DataFrame = {
+    assert(get(us).collect().map(_.getLong(0)).toSeq == Seq(1L))
+    val before = compiled
+    val atB = get(us + 3600L * 1000000L)
+    val rows = atB.collect()
+    assert(compiled == before, atB.queryExecution.executedPlan.toString)
+    assert(rows.map(_.getLong(0)).toSeq == Seq(2L))
+    val literalB = get(us + 3600L * 1000000L)
+    assert(rows.toSeq == withoutBinding(literalB.collect().toSeq))
+    val (literalC, unbound) = (get(us + 1L), compiled)
+    withoutBinding(literalC.collect())
+    assert(compiled > unbound, "without the strategy a new bound compiles a class")
+    atB
+  }
+
+  test("BindTimestampBounds: a rangeScan at a new bound reuses the compiled class") {
+    val path = storeTmp()
+    SnapshotStore.write(twoHours, path, "ts")
+    val atB = checkNoCompileAtNewBound(
+      us => SnapshotStore.rangeScan(spark, path, micros(us), micros(us + 1)).select($"id", $"v" * 2),
+      at10)
+    // the scan still prunes hours and pushes the bound to parquet
+    val plan = atB.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [") && plan.contains(" >= 2024-01-01-11)"), plan)
+    assert(plan.contains("PushedFilters: [") &&
+      plan.contains("GreaterThanOrEqual(ts,2024-01-01 11:15:00.000321)"), plan)
+  }
+
+  test("BindTimestampBounds: a graftdelta read at a new bound reuses the compiled class") {
+    val path = storeTmp() + "/tbl"
+    Seq(1L, 2L).foreach { id => // one file per row, so stats can skip one
+      DeltaLogStore.commit(spark, path, Some(twoHours.filter($"id" === id).coalesce(1)), id - 1)
+    }
+    val get = (us: Long) => DeltaLogStore.read(spark, path)
+      .filter($"ts" >= micros(us) && $"ts" < micros(us + 1)).select($"id", $"v" * 2)
+    val atB = checkNoCompileAtNewBound(get, at10)
+    val scan = atB.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+    assert(scan.metrics("numFiles").value == 1, "stats still skip the other commit's file")
+    assert(scan.toString.contains("GreaterThanOrEqual(ts,2024-01-01 11:15:00.000321)"), scan)
+  }
+
+  test("BindTimestampBounds: the filter condition renders as with literals") {
+    val path = storeTmp()
+    SnapshotStore.write(twoHours, path, "ts")
+    val q = SnapshotStore.rangeScan(spark, path, micros(at10), micros(at11 + 1))
+    def condition(plan: SparkPlan) =
+      plan.collectFirst { case f: FilterExec => f.condition }.get
+    val bound = condition(q.queryExecution.executedPlan)
+    val literal = withoutBinding(condition(
+      spark.sessionState.executePlan(q.queryExecution.analyzed).executedPlan))
+    assert(bound != literal, "the strategy rewrote the condition")
+    assert(bound.toString == literal.toString)
+    assert(bound.sql == literal.sql)
+    assert(bound.toString.contains("2024-01-01 10:15:00.000321"), bound.toString)
   }
 
   test("native pairing expressions agree with the UDF reference implementation") {

@@ -58,6 +58,17 @@ class SessionSpec extends SparkSpec {
     assert(callers("addSpark" + "Listener") == Set("main/scala/graft/StageCensus.scala"))
   }
 
+  test("only GraftRules.install registers optimizer rules and planning strategies") {
+    val main = sources(Paths.get("src", "main"))
+    // one registration point: every store read installs the same rules
+    Seq("extraOptimizations", "extraStrategies").foreach { field =>
+      val assigned = main.map { case (f, text) =>
+        f -> (java.util.regex.Pattern.quote(field) + "\\s*=(?!=)").r.findAllMatchIn(text).size }
+        .filter(_._2 > 0)
+      assert(assigned == Map("scala/graft/plans/GraftRules.scala" -> 1), field)
+    }
+  }
+
   test("the only mains under src/main are Bench, Verify, Profile, PlanDump and Scratch") {
     val main = sources(Paths.get("src", "main"))
     // a one-off probe main belongs in Profile or a scratch copy, not here

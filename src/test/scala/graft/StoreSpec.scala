@@ -947,6 +947,22 @@ class StoreSpec extends SparkSpec {
     }
   }
 
+  test("DeltaLogStore: a commit adds no file for an empty partition of its frame") {
+    import graft.store.DeltaLogStore
+    val path = targetTmp("graft_delta_empty") + "/tbl"
+    // two partitions holding one row: the first is empty
+    val frame = spark.range(0, 1, 1, 2).select(timestamp_micros(lit(T0) + $"id").as("ts"))
+    assert(frame.rdd.getNumPartitions == 2)
+    DeltaLogStore.commit(spark, path, Some(frame), 0L)
+    assert(DeltaLogStore.liveFiles(spark, path).size == 1)
+    val get = DeltaLogStore.read(spark, path).filter($"ts" === micros(T0))
+    assert(scannedFiles(get) == 1 && get.count() == 1)
+    // a frame with no row at all still commits one file
+    DeltaLogStore.commit(spark, path, Some(frame.filter($"ts" < micros(T0))), 1L)
+    assert(DeltaLogStore.liveFiles(spark, path).size == 2)
+    assert(DeltaLogStore.read(spark, path).count() == 1)
+  }
+
   test("DeltaLogStore: read over 40 live files plans with no job, typed as Spark reads it") {
     import graft.store.DeltaLogStore
     val path = targetTmp("graft_delta_40") + "/tbl"
