@@ -199,7 +199,7 @@ object Scratch {
       "q_mutual_nn_clustered" -> "sparse mutual-NN (IVF-only earned by the design sample): staged postings self-probe, repartition(src) verify — measured linear to 25x",
       "q_embed_leakage_clustered" -> "clustered leakage: test vectors probe the staged train IVF postings (one bucket each) — the structurally-quadratic LSH banding replaced in r13",
       "q_ann_tuning" -> "LSH design table: all-pairs truth on the BOUNDED sample only; per-config band self-joins + one broadcast totals join",
-      "q_delta_log" -> "graftdelta DSv2 read: log-resolved BatchScan over live parquet files, PushedFilters intact — the log layer adds zero executor operators")
+      "q_delta_log" -> "graftdelta read: a parquet FileScan over the log-resolved live files, PushedFilters intact — the log layer adds zero executor operators")
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the scale-critical queries (sf0.01)\n\n")
     sb.append("Generated by `graft.Scratch`. What to look for: `PartitionFilters`/\n")

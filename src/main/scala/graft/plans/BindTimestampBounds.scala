@@ -9,8 +9,10 @@ import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.FileSourceStrategy
 import org.apache.spark.sql.types.{DataType, TimestampType}
 
-/** Physical planning strategy for graft store scans
-  * ([[GraftRules.isGraftStore]]): plans the scan with Spark's own
+/** Physical planning strategy for graft store scans (relations their
+  * store's reader marked, [[GraftRules.isGraftStore]]: the hour store's
+  * reads, `DeltaLogStore.read` and `format("graftdelta")`, wherever the
+  * store lies on disk): plans the scan with Spark's own
   * `FileSourceStrategy`, then turns each timestamp literal of the
   * post-scan `FilterExec` into a [[TimestampBound]].
   *

@@ -6,16 +6,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Optimizer rule: for a Filter directly over a graft snapshot-store scan
-  * (a file relation rooted under SnapshotStore.root exposing the
-  * hour-bucket partition column `bucket: string` and event-time
-  * `ts: timestamp`), derive the bucket bounds implied by literal ts
-  * predicates and conjoin them, so partition pruning fires for queries
+/** Optimizer rule: for a Filter directly over a graft store scan (a file
+  * relation its store's reader marked, [[GraftRules.isGraftStore]]) that
+  * exposes the hour-bucket partition column `bucket: string` and
+  * event-time `ts: timestamp`, derive the bucket bounds implied by literal
+  * ts predicates and conjoin them, so partition pruning fires for queries
   * that only name `ts`.
   *
-  * Scoped to the store's own relations ([[GraftRules.isGraftStore]]) —
-  * matching by column names alone would rewrite any table that happens
-  * to have `bucket`/`ts` columns.
+  * Scoped by the marker, not by location or columns: a store planned
+  * from any directory gets the rule, and a table that merely has
+  * `bucket`/`ts` columns (say, a day-bucketed copy) does not.
   * Bucket strings are rendered in the session timezone, matching what
   * SnapshotStore.bucketExpr (date_trunc/date_format) wrote.
   *

@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 
 /** The one place graft's planner extensions are registered on a session.
   * Every store read calls [[install]] (`SnapshotStore.read` / `rangeScan`
-  * / `lookupBucket`, `DeltaLogStore.read`), so a session that reads a
-  * store plans it with both:
+  * / `lookupBucket`, `DeltaLogStore.relation`, and so `DeltaLogStore.read`
+  * and the `graftdelta` source), so a session that reads a store plans its
+  * marked relations ([[isGraftStore]]) with both:
   *  - [[DeriveBucketPredicate]] (optimizer): a ts-only filter over the
   *    hour store also prunes `bucket` partitions;
   *  - [[BindTimestampBounds]] (physical planning): the post-scan filter
@@ -16,13 +17,18 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    compiled for the last one instead of compiling its own. */
 object GraftRules {
 
-  /** Whether `plan` scans one of graft's own stores: a file relation whose
-    * every root lies under a `graftstore` directory (`SnapshotStore.root`,
-    * or any store kept in one). Matching by column names alone would
-    * rewrite any table that happens to have the same columns. */
+  /** The reserved `HadoopFsRelation` option that marks a relation as one
+    * of graft's stores. Only the stores' own readers set it
+    * (`SnapshotStore.read` and its bucket reads, `DeltaLogStore.relation`);
+    * it is no documented reader option. */
+  val StoreOption = "graft.store"
+
+  /** Whether `plan` scans one of graft's own stores: a file relation its
+    * reader marked with [[StoreOption]], wherever the store lies on disk.
+    * Matching by column names alone would rewrite any table that happens
+    * to have the same columns. */
   def isGraftStore(plan: LogicalPlan): Boolean = plan match {
-    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.location.rootPaths.forall(_.toString.contains("/graftstore/"))
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.options.contains(StoreOption)
     case _ => false
   }
 

@@ -1,235 +1,94 @@
 package graft.sources
 
-import java.util.{Map => JMap}
+import org.apache.spark.sql.{DataFrame, SaveMode, SQLContext}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.sources.{DataSourceRegister, InsertableRelation}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.store.DeltaLogStore
 
 /** `spark.read.format("graftdelta")` / `df.write.format("graftdelta")` —
-  * [[graft.store.DeltaLogStore]]'s transaction log as a first-class
-  * Catalyst DataSourceV2 source (VERDICT r12 Next #5; write path VERDICT
-  * r13 Next #5), matching the reference's API shape (`delta_lake.py:31-40`:
-  * `format("delta")` append + read with `versionAsOf`).
+  * [[graft.store.DeltaLogStore]]'s transaction log behind the reference's
+  * API shape (`delta_lake.py:31-40`: `format("delta")` append + read with
+  * `versionAsOf`).
   *
   * Options: `path` (the table root — also the `.load(path)`/`.save(path)`
-  * argument), `versionAsOf` (read only; default = latest version),
-  * `checkpointEvery` (write only; classic checkpoint cadence passed to
-  * the commit).
+  * argument) and `versionAsOf` (read only; default = latest version).
   *
-  * Read design: the LOG layer resolves the live file set
-  * (checkpoint-aware, file-metadata-sized) and the schema (`metaData`);
-  * the DATA plane is Spark's own V2 [[ParquetTable]] over exactly those
-  * files. That split is the whole
-  * point — filter pushdown, column pruning, vectorized reading and
-  * partition planning are the stock parquet scan's, untouched by the log
-  * layer (the plan shows `PushedFilters` on a parquet scan, asserted in
-  * StoreSpec), and this source adds zero per-row code. Real Delta readers
-  * are built exactly this way: snapshot resolution in front of the
-  * format's native scan.
+  * Read: the relation is [[graft.store.DeltaLogStore.relation]], the one
+  * `DeltaLogStore.read` returns — parquet files resolved from the log on
+  * the driver, skipped by their stats, typed by the log's `metaData`, and
+  * planned with graft's store rules. Schema and file list come from one
+  * resolution of the log, and an EMPTY snapshot (every add later removed)
+  * reads as zero rows with the declared schema, like a real Delta reader.
+  * The schema is never the user's: the source is no
+  * `SchemaRelationProvider`, so Spark rejects `.schema(...)` on it.
   *
-  * The snapshot is resolved ONCE per read (ADVICE r13): Spark calls
-  * `inferSchema` and then `getTable` on the same provider instance, and
-  * each used to re-resolve the log — two resolutions, and with
-  * `versionAsOf` absent a commit landing between the calls could pair the
-  * old snapshot's schema with the new snapshot's file list. The provider
-  * now pins the version at first resolution and caches the built table
-  * keyed by (path, versionAsOf).
-  *
-  * An EMPTY snapshot (every add later removed — a valid Delta state the
-  * checkpoint path fully supports via tombstones) reads as a ZERO-ROW
-  * table (ADVICE r13), schema from the log's `metaData.schemaString`
-  * exactly like a real Delta reader; errors are reserved for a
-  * missing/unresolvable log.
-  *
-  * Write design (the V1Write bridge every simple connector uses): APPEND
-  * and OVERWRITE commit through [[graft.store.DeltaLogStore.commit]] —
-  * parquet part files + one JSON commit with `add` (and, for overwrite,
-  * `remove`) actions, version = latest + 1. A FIRST append (or
-  * overwrite) to a fresh directory CREATES the table: commit(version=0)
-  * writes the protocol/metaData header from the incoming DataFrame's
-  * schema — the reference's `store_document` appends to a directory it
-  * never explicitly created and relies on exactly this Delta semantic
-  * (`delta_lake.py:31-36`; ADVICE r14). The writer rejects `versionAsOf`
-  * (writes go to the head, not into history), and READS of a
-  * never-created table still fail loudly. */
-class GraftDeltaSource extends TableProvider with DataSourceRegister {
+  * Write: APPEND and OVERWRITE commit through
+  * [[graft.store.DeltaLogStore.commit]] — parquet part files + one JSON
+  * commit with `add` (and, for overwrite, `remove`) actions, version =
+  * latest + 1, the incoming columns matched to the table's by name. A
+  * FIRST append (or overwrite) to a fresh directory CREATES the table:
+  * commit(version = 0) writes the protocol/metaData header from the
+  * incoming schema — the reference's `store_document` appends to a
+  * directory it never explicitly created and relies on exactly this Delta
+  * semantic (`delta_lake.py:31-36`). The writer rejects `versionAsOf`
+  * (writes go to the head, not into history) and the modes that would
+  * silently skip a write or fail only on an existing table; READS of a
+  * never-created table fail loudly. */
+class GraftDeltaSource extends RelationProvider with CreatableRelationProvider
+  with DataSourceRegister {
 
   override def shortName(): String = "graftdelta"
 
-  // schema comes from the resolved snapshot's log metaData, never from
-  // the user (a mismatching user schema would silently corrupt column
-  // pruning against the checkpointed metaData)
-  override def supportsExternalMetadata(): Boolean = false
+  private def tablePath(parameters: Map[String, String]): String =
+    parameters.getOrElse("path", throw new IllegalArgumentException(
+      "graftdelta requires a table path: spark.read.format(\"graftdelta\").load(path)"))
 
-  // one resolution per (path, versionAsOf): inferSchema pins the version,
-  // getTable reuses the identical snapshot (ADVICE r13 — the double
-  // resolve was both 2x driver cost and a latest-version race)
-  private var cached: Option[(String, GraftDeltaTable)] = None
-
-  private def resolve(options: CaseInsensitiveStringMap): GraftDeltaTable =
-    synchronized {
-      val tablePath = Option(options.get("path")).getOrElse(
-        throw new IllegalArgumentException(
-          "graftdelta requires a table path: " +
-            "spark.read.format(\"graftdelta\").load(path)"))
-      val key = tablePath + "@" + Option(options.get("versionAsOf")).getOrElse("latest")
-      cached match {
-        case Some((k, t)) if k == key => t
-        case _ =>
-          val spark = SparkSession.active
-          val asOfOpt = Option(options.get("versionAsOf")).map(_.toLong)
-          val latest = graft.store.DeltaLogStore.latestVersion(tablePath)
-          // a missing log is legal here ONLY for the create-on-first-
-          // append write path (ADVICE r14: the reference appends to a
-          // fresh directory and relies on Delta's create-table-on-first-
-          // append; `resolve` also fronts writes, so it must not throw).
-          // Reads of the not-yet-created table still fail loudly — in
-          // newScanBuilder, the first point that is read-specific.
-          require(latest >= 0 || asOfOpt.isEmpty,
-            s"no graftdelta log found at $tablePath (cannot time-travel " +
-              "a table that was never created)")
-          val asOf = asOfOpt.getOrElse(latest)
-          val t = new GraftDeltaTable(spark, tablePath, asOf,
-            timeTraveled = asOfOpt.isDefined, options)
-          cached = Some((key, t))
-          t
-      }
-    }
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    resolve(options).schema()
-
-  override def getTable(
-      schema: StructType,
-      partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    resolve(new CaseInsensitiveStringMap(properties))
-}
-
-/** The resolved-snapshot table: reads delegate to Spark's V2
-  * [[ParquetTable]] over the snapshot's live files (zero-row scan when
-  * the snapshot is empty), writes bridge to
-  * [[graft.store.DeltaLogStore.commit]]. */
-private[sources] class GraftDeltaTable(
-    spark: SparkSession,
-    tablePath: String,
-    asOf: Long,
-    timeTraveled: Boolean,
-    options: CaseInsensitiveStringMap)
-  extends Table with SupportsRead with SupportsWrite {
-
-  // asOf == -1 <=> the table was never created (no log on disk): a
-  // write-only state — the first append commits version 0 with the
-  // incoming DataFrame's schema (Delta's create-table-on-first-append,
-  // ADVICE r14); any read attempt fails in newScanBuilder
-  private val notYetCreated = asOf < 0
-
-  // the live file list, resolved from the log on the driver (no Spark
-  // job) once at table construction — schema and file list come from the
-  // SAME snapshot
-  private val files: Seq[String] =
-    if (notYetCreated) Nil
-    else graft.store.DeltaLogStore.liveFiles(spark, tablePath, Some(asOf))
-      .map(p => s"$tablePath/$p")
-
-  // typed by the log's metaData, so ParquetTable runs no schema-inference
-  // job over the files' footers
-  private lazy val logSchema = graft.store.DeltaLogStore.snapshotSchema(spark, tablePath, asOf)
-
-  private val parquet: Option[ParquetTable] =
-    if (files.isEmpty) None
-    else Some(ParquetTable(name(), spark, options, files, Some(logSchema),
-      classOf[ParquetFileFormat]))
-
-  override def name(): String =
-    s"graftdelta $tablePath${if (timeTraveled) s"@v$asOf" else ""}"
-
-  override def schema(): StructType =
-    if (notYetCreated) new StructType() // first append supplies the schema
-    else parquet match {
-      case Some(p) => p.schema
-      // empty snapshot: the schema the log declares — zero rows, real
-      // schema, like Delta
-      case None => logSchema
-    }
-
-  // BATCH_WRITE is what DataFrameWriter.save gates the V2 write path on;
-  // V1_BATCH_WRITE is what routes the planned AppendData/Overwrite through
-  // the V1Write bridge below — both are required. A not-yet-created table
-  // additionally declares ACCEPT_ANY_SCHEMA: its declared schema is empty
-  // (there is no log to read one from), so analysis must not validate the
-  // incoming columns against it — version 0 adopts the data's schema,
-  // after which appends validate against the real table schema as usual.
-  override def capabilities(): java.util.Set[TableCapability] = {
-    val base = Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
-    (if (notYetCreated) base + TableCapability.ACCEPT_ANY_SCHEMA else base).asJava
+  override def createRelation(
+      sqlContext: SQLContext,
+      parameters: Map[String, String]): BaseRelation = {
+    val path = tablePath(parameters)
+    val asOf = parameters.get("versionAsOf").map(_.toLong)
+    if (DeltaLogStore.latestVersion(path) < 0)
+      throw new IllegalArgumentException(s"no graftdelta log found at $path " +
+        (if (asOf.isDefined) "(cannot time-travel a table that was never created)"
+        else "(create the table by appending to it, or with DeltaLogStore.commit)"))
+    DeltaLogStore.relation(sqlContext.sparkSession, path, asOf)
   }
 
-  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    if (notYetCreated)
+  override def createRelation(
+      sqlContext: SQLContext,
+      mode: SaveMode,
+      parameters: Map[String, String],
+      data: DataFrame): BaseRelation = {
+    val spark = sqlContext.sparkSession
+    val path = tablePath(parameters)
+    // the head version current at write time: a reader holding an older
+    // relation keeps its resolved snapshot (Delta's snapshot isolation)
+    val head = DeltaLogStore.latestVersion(path)
+    parameters.get("versionAsOf").foreach { v =>
+      require(head >= 0, s"no graftdelta log found at $path " +
+        "(cannot time-travel a table that was never created)")
       throw new IllegalArgumentException(
-        s"no graftdelta log found at $tablePath " +
-          "(create the table by appending to it, or with DeltaLogStore.commit)")
-    else parquet match {
-      case Some(p) => p.newScanBuilder(o)
-      case None =>
-        val s = schema()
-        new ScanBuilder {
-          override def build(): Scan = new Scan with Batch {
-            override def readSchema(): StructType = s
-            override def toBatch: Batch = this
-            override def planInputPartitions(): Array[InputPartition] = Array.empty
-            override def createReaderFactory(): PartitionReaderFactory =
-              (_: InputPartition) => throw new IllegalStateException(
-                "empty graftdelta snapshot has no partitions to read")
-          }
-        }
+        s"cannot write to a time-traveled graftdelta table ($path@v$v): " +
+          "writes always target the table head")
     }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(!timeTraveled,
-      s"cannot write to a time-traveled graftdelta table ($tablePath@v$asOf): " +
-        "writes always target the table head")
-    val checkpointEvery =
-      Option(options.get("checkpointEvery")).map(_.toInt).getOrElse(0)
-    new WriteBuilder with SupportsTruncate {
-      private var overwrite = false
-      // SaveMode.Overwrite arrives as truncate() on the builder (the
-      // whole-table case of OverwriteByExpression)
-      override def truncate(): WriteBuilder = { overwrite = true; this }
-      override def build(): Write = new V1Write {
-        override def toInsertableRelation: InsertableRelation =
-          new InsertableRelation {
-            override def insert(data: DataFrame, legacyOverwrite: Boolean): Unit = {
-              val session = data.sparkSession
-              // commit under the head version current AT WRITE TIME (a
-              // reader holding this table object keeps its resolved
-              // snapshot — Delta's snapshot-isolation contract)
-              // head == -1 on a fresh directory: commit(version = 0)
-              // writes the protocol/metaData header from the data's
-              // schema — Delta's create-table-on-first-append (and
-              // first-overwrite) semantics (ADVICE r14)
-              val head = graft.store.DeltaLogStore.latestVersion(tablePath)
-              val removes =
-                if (head < 0 || !(overwrite || legacyOverwrite)) Nil
-                else graft.store.DeltaLogStore.liveFiles(session, tablePath, Some(head))
-              graft.store.DeltaLogStore.commit(session, tablePath,
-                Some(data), head + 1, removePaths = removes,
-                checkpointEvery = checkpointEvery)
-            }
-          }
+    require(mode == SaveMode.Append || mode == SaveMode.Overwrite,
+      s"graftdelta cannot be written with $mode mode: use append or overwrite")
+    // an existing table takes the data by column name, cast to its types
+    // where the cast is safe; a missing or extra column fails the write
+    val rows =
+      if (head < 0) data
+      else {
+        val schema = DeltaLogStore.relation(spark, path, Some(head)).schema
+        require(data.columns.length == schema.length,
+          s"graftdelta table $path has columns ${schema.fieldNames.mkString(", ")}; " +
+            s"the data has ${data.columns.mkString(", ")}")
+        data.to(schema)
       }
-    }
+    val removes =
+      if (head < 0 || mode == SaveMode.Append) Nil
+      else DeltaLogStore.liveFiles(spark, path, Some(head))
+    DeltaLogStore.commit(spark, path, Some(rows), head + 1, removePaths = removes)
+    createRelation(sqlContext, parameters)
   }
 }

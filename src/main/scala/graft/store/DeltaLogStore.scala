@@ -54,7 +54,7 @@ import org.apache.spark.sql.types._
   * Data skipping: each `add` carries the protocol's per-file `stats`
   * (`numRecords`, and `minValues` / `maxValues` / `nullCount` of the
   * timestamp and date columns), taken from the new file's parquet footer
-  * at commit; [[read]]'s file index drops a file whose stats refute a
+  * at commit; [[relation]]'s file index drops a file whose stats refute a
   * filter conjunct (see [[LogFileIndex]]). A file without stats (older
   * tables, hand-written adds) is always read.
   *
@@ -62,7 +62,7 @@ import org.apache.spark.sql.types._
   * one listing of `_delta_log`, the checkpoint read with parquet-mr, the
   * commits after it (fewer than `checkpointEvery`; at 100 TB a table has
   * 10⁵⁺ commits, never all read) with Jackson, then a fold keeping each
-  * path's last action. [[read]] plans from that fold alone: the file
+  * path's last action. [[relation]] plans from that fold alone: the file
   * statuses are the `add` actions (no data file is listed, stat'ed or
   * opened), the schema is the log's `metaData`, and the stats prune
   * files before any task is planned. A get over one instant of a
@@ -401,16 +401,11 @@ object DeltaLogStore {
     ()
   }
 
-  /** The schema the log DECLARES at `asOf`: the newest
-    * `metaData.schemaString` (which IS Spark's StructType JSON) at or
-    * below `asOf`, resolved on the driver like the rest of the log, with
-    * every field nullable, as Spark reads parquet. Real Delta always types
-    * from metaData; so do [[read]] and the graftdelta source, and an
-    * EMPTY snapshot, with no parquet footer to infer from, types the same
-    * way (ADVICE r13). */
-  def snapshotSchema(spark: SparkSession, tablePath: String, asOf: Long): StructType =
-    schemaOf(snapshot(spark, tablePath, Some(asOf)), tablePath)
-
+  /** The schema the log declares: the snapshot's newest
+    * `metaData.schemaString` (which IS Spark's StructType JSON), with every
+    * field nullable, as Spark reads parquet. Real Delta always types from
+    * metaData; so does [[relation]], and an EMPTY snapshot, with no parquet
+    * footer to infer from, types the same way. */
   private def schemaOf(snap: Snapshot, tablePath: String): StructType = {
     require(snap.schemaString.nonEmpty, s"no metaData action in $tablePath log")
     nullable(DataType.fromJson(snap.schemaString.get).asInstanceOf[StructType])
@@ -465,24 +460,34 @@ object DeltaLogStore {
   }
 
   /** Read the table snapshot `VERSION AS OF versionAsOf` (None = latest):
-    * a parquet scan planned from the log alone — its files are the live
-    * `add`s, skipped by their stats ([[LogFileIndex]]), its schema the
-    * log's `metaData` — with pushdown and column pruning intact. It
-    * installs [[graft.plans.GraftRules]] as the hour store's reads do, so
-    * a table kept under a `graftstore` directory has the timestamp bounds
-    * of its post-scan filter read by reference: a filter at a new instant
-    * reuses the class compiled for the last one. */
+    * the frame of [[relation]]. */
   def read(
       spark: SparkSession,
       tablePath: String,
-      versionAsOf: Option[Long] = None): DataFrame = {
+      versionAsOf: Option[Long] = None): DataFrame =
+    spark.baseRelationToDataFrame(relation(spark, tablePath, versionAsOf))
+
+  /** The table snapshot `VERSION AS OF versionAsOf` (None = latest) as a
+    * parquet relation planned from the log alone: its files are the live
+    * `add`s, skipped by their stats ([[LogFileIndex]]), its schema the
+    * log's `metaData`, with pushdown and column pruning intact. An empty
+    * snapshot (every add removed) is a relation over no file: zero rows,
+    * the log's schema. Schema and files come from one resolution of the
+    * log. The relation carries [[graft.plans.GraftRules.StoreOption]] and
+    * the session gets [[graft.plans.GraftRules]], so the timestamp bounds
+    * of its post-scan filter are read by reference: a filter at a new
+    * instant reuses the class compiled for the last one. `read` and the
+    * `graftdelta` source both return it. */
+  def relation(
+      spark: SparkSession,
+      tablePath: String,
+      versionAsOf: Option[Long] = None): HadoopFsRelation = {
     graft.plans.GraftRules.install(spark)
     val snap = snapshot(spark, tablePath, versionAsOf)
-    require(snap.adds.nonEmpty, s"empty snapshot for $tablePath at $versionAsOf")
     val schema = schemaOf(snap, tablePath)
-    spark.baseRelationToDataFrame(HadoopFsRelation(
+    HadoopFsRelation(
       new LogFileIndex(tablePath, snap.adds, schema), new StructType(), schema,
-      None, new ParquetFileFormat(), Map.empty)(spark))
+      None, new ParquetFileFormat(), Map(graft.plans.GraftRules.StoreOption -> "true"))(spark)
   }
 
   /** One snapshot's live files as a Spark file index. Their statuses are

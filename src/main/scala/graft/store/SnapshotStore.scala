@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StringType, StructType, TimestampType}
 
+import graft.plans.GraftRules
 import graft.sources.Tables
 
 /** Hour-partitioned parquet snapshot store — the ApacheParquetStore
@@ -36,7 +37,8 @@ import graft.sources.Tables
   * root, so `bucket` stays a partition column). Nothing is cached: every
   * call lists afresh and sees the last append.
   *
-  * Every read installs [[graft.plans.GraftRules]] on its session: the
+  * Every read marks its relation as a store (`GraftRules.StoreOption`)
+  * and installs [[graft.plans.GraftRules]] on its session: the
   * optimizer derives `bucket` bounds from a ts-only filter
   * (`DeriveBucketPredicate`), and the planner hands the post-scan filter
   * its timestamp bounds by reference (`BindTimestampBounds`), so a get or
@@ -109,20 +111,21 @@ object SnapshotStore {
   }
 
   def read(spark: SparkSession, path: String): DataFrame = {
-    graft.plans.GraftRules.install(spark)
-    spark.read.schema(storeSchema(spark, path, bucketDirs(path))).parquet(path)
+    GraftRules.install(spark)
+    spark.read.schema(storeSchema(spark, path, bucketDirs(path)))
+      .option(GraftRules.StoreOption, "true").parquet(path)
   }
 
   /** The store's rows from the hour directories in [lo, hi] alone. */
   private def readBuckets(spark: SparkSession, path: String, lo: String, hi: String): DataFrame = {
-    graft.plans.GraftRules.install(spark)
+    GraftRules.install(spark)
     val dirs = bucketDirs(path)
     val hit = dirs.filter { d =>
       val b = d.getName.stripPrefix("bucket=")
       b >= lo && b <= hi
     }
     spark.read.schema(storeSchema(spark, path, dirs)).option("basePath", path)
-      .parquet(hit.map(_.getPath): _*)
+      .option(GraftRules.StoreOption, "true").parquet(hit.map(_.getPath): _*)
   }
 
   /** Point/bucket lookup: reads the one hour directory, and the equality

@@ -16,7 +16,8 @@ class PlanRulesSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  // the rule only rewrites relations rooted under the graft store
+  // a directory under the store root, where the registry's stores live;
+  // the rules match a store by its relation, so any directory plans alike
   private def storeTmp(): String =
     SparkSpec.tmpUnder(java.nio.file.Paths.get(SnapshotStore.root), "rule")
 
@@ -53,13 +54,17 @@ class PlanRulesSpec extends SparkSpec {
       (2L, ts("2024-01-03 11:05:00"), 2.0)
     ).toDF("id", "ts", "v")
     SnapshotStore.write(events, path, "ts")
+    // the store's own (marked) relation, read before the rule is removed:
+    // a store read reinstalls it
+    val store = SnapshotStore.read(spark, path)
+    def day(df: DataFrame) = df.filter($"ts" >= lit("2024-01-01 00:00:00").cast("timestamp") &&
+      $"ts" < lit("2024-01-02 00:00:00").cast("timestamp"))
+    assert(day(store).queryExecution.executedPlan.toString.contains("(bucket#"))
     val saved = spark.experimental.extraOptimizations
     try {
       spark.experimental.extraOptimizations =
         saved.filterNot(_ == graft.plans.DeriveBucketPredicate)
-      val bare = spark.read.parquet(path)
-        .filter($"ts" >= lit("2024-01-01 00:00:00").cast("timestamp") &&
-          $"ts" < lit("2024-01-02 00:00:00").cast("timestamp"))
+      val bare = day(store)
       val plan = bare.queryExecution.executedPlan.toString
       // schema still lists the partition column, but no predicate on it:
       // PartitionFilters is empty, every hour directory is read
@@ -85,6 +90,13 @@ class PlanRulesSpec extends SparkSpec {
       .toDF("bucket", "ts", "v")
     val out = foreign.filter($"ts" >= lit("2024-01-01 00:00:00").cast("timestamp"))
     assert(out.count() == 1) // a derived hour-string predicate would drop the row
+    // an hour store under the store root, read without its reader's
+    // marker: the directory alone does not make it a store
+    val path = storeTmp()
+    SnapshotStore.write(foreign.drop("bucket"), path, "ts")
+    SnapshotStore.read(spark, path) // installs the rule on the session
+    val bare = spark.read.parquet(path).filter($"ts" >= lit("2024-01-01 00:00:00").cast("timestamp"))
+    assert(!bare.queryExecution.executedPlan.toString.contains("(bucket#"))
   }
 
   test("DeriveBucketPredicate is idempotent and leaves bucket-aware filters alone") {
@@ -154,12 +166,48 @@ class PlanRulesSpec extends SparkSpec {
     Seq(1L, 2L).foreach { id => // one file per row, so stats can skip one
       DeltaLogStore.commit(spark, path, Some(twoHours.filter($"id" === id).coalesce(1)), id - 1)
     }
-    val get = (us: Long) => DeltaLogStore.read(spark, path)
-      .filter($"ts" >= micros(us) && $"ts" < micros(us + 1)).select($"id", $"v" * 2)
-    val atB = checkNoCompileAtNewBound(get, at10)
-    val scan = atB.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
-    assert(scan.metrics("numFiles").value == 1, "stats still skip the other commit's file")
-    assert(scan.toString.contains("GreaterThanOrEqual(ts,2024-01-01 11:15:00.000321)"), scan)
+    // DeltaLogStore.read, and format("graftdelta") with a projection of
+    // its own, so that its literal plan compiles a class of its own
+    val reads = Seq[(Long => DataFrame, Column)](
+      (_ => DeltaLogStore.read(spark, path), $"v" * 2),
+      (_ => spark.read.format("graftdelta").load(path), $"v" * 3))
+    reads.foreach { case (table, value) =>
+      val get = (us: Long) => table(us)
+        .filter($"ts" >= micros(us) && $"ts" < micros(us + 1)).select($"id", value)
+      val atB = checkNoCompileAtNewBound(get, at10)
+      val scan = atB.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }.get
+      assert(scan.metrics("numFiles").value == 1, "stats still skip the other commit's file")
+      assert(scan.toString.contains("GreaterThanOrEqual(ts,2024-01-01 11:15:00.000321)"), scan)
+    }
+  }
+
+  test("a store plans the same under target/ and under the store root") {
+    // one executed plan, rendered with expression ids and the table's
+    // directory dropped, plus the classes of its expressions (a bound read
+    // by reference renders as the literal it replaces)
+    def shape(df: DataFrame, dir: String): String = {
+      val plan = df.queryExecution.executedPlan
+      plan.toString.replace(dir, "<dir>").replaceAll("#\\d+", "#") +
+        plan.collect { case p => p.expressions.flatMap(_.collect { case e => e.getClass.getName }) }
+    }
+    val (elsewhere, underRoot) = (targetTmp("same_plan"), storeTmp())
+    val reads = Seq[String => DataFrame](
+      dir => SnapshotStore.rangeScan(spark, s"$dir/hours", micros(at10), micros(at11)).select($"id"),
+      dir => DeltaLogStore.read(spark, s"$dir/tbl")
+        .filter($"ts" >= micros(at10) && $"ts" < micros(at11)).select($"id"))
+    Seq(elsewhere, underRoot).foreach { dir =>
+      SnapshotStore.write(twoHours, s"$dir/hours", "ts")
+      DeltaLogStore.commit(spark, s"$dir/tbl", Some(twoHours.coalesce(1)), 0L)
+    }
+    // planned with file locations unabbreviated: the two directories'
+    // names differ in length
+    Session.withConf(spark, "spark.sql.maxMetadataStringLength" -> "100000") {
+      reads.foreach { read =>
+        val (a, b) = (read(elsewhere), read(underRoot))
+        assert(a.as[Long].collect().toSeq == Seq(1L) && b.as[Long].collect().toSeq == Seq(1L))
+        assert(shape(a, elsewhere) == shape(b, underRoot))
+      }
+    }
   }
 
   test("BindTimestampBounds: the filter condition renders as with literals") {

@@ -85,6 +85,13 @@ class SessionSpec extends SparkSpec {
       Set("scala/graft/store/ParquetFiles.scala"))
   }
 
+  test("the planner rules name no store directory") {
+    // a store is matched by the marker its reader sets on the relation
+    val plans = sources(Paths.get("src", "main", "scala", "graft", "plans"))
+    assert(plans.contains("GraftRules.scala"))
+    assert(occurrences(plans, "/graft" + "store/") == Map.empty)
+  }
+
   test("one versioned-view fold and one RocksDB provider setting under src/main") {
     val main = sources(Paths.get("src", "main"))
     // latestView's definition and the two reads of Replay.foldView: a

@@ -996,12 +996,12 @@ class StoreSpec extends SparkSpec {
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b"), (3L, "c")))
     assert(spark.read.format("graftdelta").option("versionAsOf", 0L).load(path)
       .as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b")))
-    // the data plane is the stock V2 parquet scan: a filter must reach
-    // the scan as PushedFilters, and the plan must be a BatchScan over
+    // the data plane is the stock parquet scan: a filter must reach
+    // the scan as PushedFilters, and the plan must be a FileScan over
     // parquet — the log layer adds no execution operator of its own
     val q = spark.read.format("graftdelta").load(path).filter($"k" === 2L)
     val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("BatchScan"), plan.take(2000))
+    assert(plan.contains("FileScan parquet"), plan.take(2000))
     assert(plan.contains("PushedFilters") && plan.contains("IsNotNull(k)")
       && plan.contains("EqualTo(k,2)"), plan.take(2000))
     assert(q.as[(Long, String)].collect().toSeq == Seq((2L, "b")))
@@ -1049,6 +1049,15 @@ class StoreSpec extends SparkSpec {
     // both round trips also read through the library reader (same log)
     assert(DeltaLogStore.read(spark, path).as[(Long, String)]
       .collect().toSet == Set((9L, "z")))
+    // a mode that would skip the write, or fail only on an existing
+    // table, is refused and commits nothing
+    Seq("errorifexists", "ignore").foreach { mode =>
+      val e = intercept[IllegalArgumentException] {
+        Seq((8L, "y")).toDF("k", "s").write.format("graftdelta").mode(mode).save(path)
+      }
+      assert(e.getMessage.contains("use append or overwrite"), e.getMessage)
+      assert(DeltaLogStore.latestVersion(path) == 2L, mode)
+    }
     ()
   }
 
@@ -1112,6 +1121,9 @@ class StoreSpec extends SparkSpec {
     // time travel back to the non-empty version unaffected
     assert(spark.read.format("graftdelta").option("versionAsOf", 0L).load(path)
       .as[(Long, String)].collect().toSet == Set((1L, "a")))
+    // the library reader serves the same empty version
+    val lib = DeltaLogStore.read(spark, path, Some(1L))
+    assert(lib.schema == empty.schema && lib.count() == 0L)
     ()
   }
 
